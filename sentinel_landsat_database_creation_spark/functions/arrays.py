@@ -40,16 +40,6 @@ def count_nonzero(arr: Column) -> Column:
     return F.size(F.filter(arr, lambda x: x != 0))
 
 
-def count_equal(arr: Column, value: float) -> Column:
-    """sum(x == sentinel) analog, e.g. the -9999 nodata count (op 26)."""
-    return F.size(F.filter(arr, lambda x: x == F.lit(value)))
-
-
-def count_inf(arr: Column) -> Column:
-    """sum(isinf(x)) analog (op 26)."""
-    return F.size(F.filter(arr, lambda x: F.abs(x) == F.lit(float("inf"))))
-
-
 def sum_over_bands(bands: Column, stat) -> Column:
     """Apply a per-band count expression across the band array and sum —
     the reference computes its quality percentages over b*b*n pixels

@@ -17,13 +17,15 @@ planted at ~1/600 cell rates, which puts every quality-gate branch on
 both sides of its threshold across the corpus.
 
 Scale shape: tensors are n_pairs rows (each carrying its flattened
-band arrays — the E3 handoff shape), centers broadcast, slicing and
-quality run as codegen'd higher-order functions, and suppression is
+band arrays — the E3 handoff shape), centers broadcast as one array per
+mask, and each pair row is decided and cut in ONE NumPy mapInArrow call
+(operators/crops.py:crop_pairs): quality from summed-area tables, then
 either the native grid dedup (exact DuckDB oracle) or the faithful
-per-pair greedy walk (`applyInPandas` over centers ONLY — pixels never
-enter Python; tests/test_plans.py pins that from the executed plan).
-At 100 TB the same plan holds: pairs partition freely, per-pair state
-is bounded by one mask's center list.
+greedy walk (recursive-CTE oracle). Only survivors leave Python, and no
+exchange carries pixels (tests/test_plans.py pins that from the
+executed plan for every crop entry). At 100 TB the same plan holds:
+pairs partition freely, per-pair state is one pair's stacks plus one
+mask's center list.
 """
 
 from __future__ import annotations
@@ -32,7 +34,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.arrays import count_nonzero, sum_over_bands
-from ..operators.crops import candidate_centers
 from .satellite import CropConfig, build_crop_dataset
 
 BATCH = 12
@@ -53,7 +54,7 @@ def params_for(sf_dir: str) -> dict:
         # memo=False: 280 pairs x ~2.3 MB of generated bands is ~650 MB
         # of checkpoint blocks — materializing that in the deliberate
         # 1 GB heap OOMs the JVM (measured, r5). At this tier the
-        # tensors regenerate per consuming phase instead: linear extra
+        # tensors regenerate per consuming query instead: linear extra
         # compute, O(TENSOR_SLOTS x one pair) memory — the same trade a
         # real deployment makes by reading tensors from parquet rather
         # than pinning them in executor storage.
@@ -94,8 +95,9 @@ def volume_mask(spark: SparkSession, width: int) -> DataFrame:
     """One dense centerline mask (the reference's as-built shape: a
     single fixed mask shared by every pair, fct_data_extraction.py:50):
     pixel==1 where (r*31 + c*17) % 16 == 0 — 1/16 density spread over
-    the whole raster, ~4k centerline points at 256x256."""
-    return spark.range(1).select(
+    the whole raster, ~4k centerline points at 256x256. One explicit
+    split, so the plan carries no core-count-derived partition count."""
+    return spark.range(0, 1, 1, 1).select(
         F.lit(1).alias("mask_id"),
         F.lit(width).alias("height"),
         F.lit(width).alias("width"),
@@ -117,9 +119,9 @@ def volume_mask(spark: SparkSession, width: int) -> DataFrame:
 
 
 # Concurrent-task cap for the tensor stages: each pair task's working
-# set is ~10-20 MB (band generation + one chunk's crops), and the bench
-# session runs a deliberate 1 GB heap that may already hold hundreds of
-# MB of memoized checkpoint blocks from earlier registry queries.
+# set is ~10-20 MB (band generation + one pair in the crop kernel), and
+# the bench session runs a deliberate 1 GB heap that may already hold
+# hundreds of MB of memoized checkpoint blocks from earlier queries.
 # 28-32 concurrent pair tasks OOMed the WARM session (measured, r4);
 # 8 slots run the same 103k-crop volume in the same wall time (16.7 s
 # warm vs 16.4 s cold at 28 tasks — per-pair codegen throughput, not
@@ -143,9 +145,9 @@ def volume_tensors(
     every downstream narrow stage (generation, slicing, quality) runs
     at most that many concurrent heavy tasks — no shuffle involved.
     ``slices`` overrides the split count when the consumer's unit of
-    work is the PARTITION rather than the row (the r14 Arrow metadata
-    path bounds its input batch bytes this way; default unchanged so
-    every pinned consumer plan is byte-identical)."""
+    work is the PARTITION rather than the row: the crop kernel's Arrow
+    input batch is one partition, so ``-(-n_pairs // 4)`` slices bound
+    it to <= 4 rows (~9 MB at 256 px)."""
     pid = F.col("id")
     if slices is None:
         slices = min(TENSOR_SLOTS, n_pairs)
@@ -165,8 +167,8 @@ def crop_volume_dataset(
 
     p = params_for(sf_dir)
     mask = volume_mask(spark, p["hrw"])
-    # The tensor generation expressions re-run per consuming phase (two
-    # phases x two registry queries = four generations of the same 28
+    # The tensor generation expressions would re-run per consuming
+    # query (two registry queries = two generations of the same 28
     # rows). Materialize once per session: ~230 MB of MEMORY_AND_DISK
     # blocks at sf0.1 — storage is evictable under pressure (unlike the
     # execution spikes that motivated TENSOR_SLOTS), and the blocks are
@@ -177,8 +179,11 @@ def crop_volume_dataset(
             ("crop_volume_tensors", p["n_pairs"], p["hrw"], p["lrw"]),
             lambda: volume_tensors(spark, p["n_pairs"], p["hrw"], p["lrw"]),
         )
-    else:  # scale tier: see params_for — regenerate instead of caching
-        tensors = volume_tensors(spark, p["n_pairs"], p["hrw"], p["lrw"])
+    else:  # scale tier: see params_for — regenerate instead of caching,
+        # in <= 4-row slices so each Arrow input batch stays ~9 MB
+        tensors = volume_tensors(
+            spark, p["n_pairs"], p["hrw"], p["lrw"], slices=-(-p["n_pairs"] // 4)
+        )
     cfg = CropConfig(
         batch_size=BATCH, scale=SCALE, pct_overlap=PCT, compat=compat
     )
@@ -217,306 +222,18 @@ def q_crop_volume(spark: SparkSession, sf: str) -> DataFrame:
     return _summarize(crop_volume_dataset(spark, sf, compat=False))
 
 
-def _collected_centers(mask: DataFrame, batch_size: int) -> list:
-    """Compat-bounds candidate centers collected to the driver as
-    (ord, r, c) rows in np.where order — the SAME metadata-bounded
-    list the HOF plan materialized into its broadcast ``ctrs`` array
-    (slice_crop_pairs packs per-mask collect_list structs); here it
-    feeds the Arrow stage's closure instead. Bounded by one mask's
-    centerline BY DESIGN (~4k rows at the volume raster), never by
-    corpus size."""
-    rows = (
-        candidate_centers(mask, batch_size, compat_bounds=True)
-        .select("ord", "r", "c")
-        .orderBy("ord")
-        .collect()
-    )
-    return [(int(x["ord"]), int(x["r"]), int(x["c"])) for x in rows]
-
-
-def _greedy_candidate_meta_arrow(
-    tensors: DataFrame, centers: list, batch_size: int, scale: int
-) -> DataFrame:
-    """Phase 1 of the compat volume pipeline as ONE NumPy mapInArrow
-    stage (r14, guide §4.2/§4.5; r13 VERDICT item 1): per candidate
-    crop, the quality counts and the HR nonzero count, emitted as
-    METADATA rows (pair_id, ord, r, c, ok, nz_hr) — ~30 B/row.
-
-    What it replaces, measured (r13 ledger + plans/r14 dumps): the
-    codegen'd higher-order-function slicing materialized BOTH crop
-    arrays per candidate (~5 KB x 103k candidates at sf0.1) and ran
-    four count filters over them, then a SECOND slice pass re-cut the
-    survivors so _summarize could count nz_hr — per-pair-codegen
-    throughput was the measured bottleneck (r4, re-confirmed r13).
-    Here the band payload crosses ONCE per pair row into NumPy (the
-    §8 discipline: heavy bytes move once, decisions flow as metadata),
-    all candidates of a pair are sliced as one fancy-indexed gather,
-    and no second pass exists — nz_hr rides the metadata into the walk.
-
-    Exact-equivalence notes (oracle + A/B pinned):
-    - slice2d's NumPy edge semantics (rows past the bottom vanish,
-      per-row width clamps at the right edge) are reproduced with an
-      explicit validity mask over clipped gather indices; quality
-      counts only ever count VALID cells, and the fixed denominators
-      (576/64/192 at batch 12) stay as quality_flag defines them.
-    - values arrive bit-identical (the same generated doubles,
-      Arrow-transported), comparisons are exact (!=0, ==-9999, isinf),
-      counts are integers — no float drift anywhere.
-
-    Arrow direct-memory budget (the r13 VERDICT's explicit condition;
-    same arena math as plans/scene_volume.py): one in-flight input
-    batch per concurrent task, batch = one tensor partition. At sf0.1
-    the memoized frame is TENSOR_SLOTS=8 partitions x ~4 rows x
-    ~2.3 MB/row ≈ 9 MB/batch -> ≤ 8 x ~9 MB in flight plus the
-    per-task netty arena (32 MB chunks), well inside the 1 GB default
-    direct cap. The no-memo scale tier generates ceil(n_pairs/4)
-    slices for the same ≤4-row bound (q_crop_volume_greedy)."""
-    half = batch_size // 2
-    lr_size = batch_size // scale
-    n_bands = 4
-    hr_px = batch_size * batch_size * n_bands
-    lr_px = lr_size * lr_size * n_bands
-    inf_denom = lr_size * batch_size * n_bands  # compat denominator
-
-    def run(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        ord_a = np.array([x[0] for x in centers], dtype=np.int64)
-        r_a = np.array([x[1] for x in centers], dtype=np.int64)
-        c_a = np.array([x[2] for x in centers], dtype=np.int64)
-        templates: dict = {}  # (n_px, width, side) -> (idx, valid)
-
-        def template(n_px: int, width: int, r0, c0, size: int):
-            key = (n_px, width, size)
-            t = templates.get(key)
-            if t is None:
-                height = n_px // width
-                d = np.arange(size, dtype=np.int64)
-                rows = r0[:, None] + d  # (K, size)
-                cols = c0[:, None] + d
-                valid = (rows < height)[:, :, None] & (cols < width)[
-                    :, None, :
-                ]
-                idx = np.clip(
-                    rows[:, :, None] * width + cols[:, None, :], 0, n_px - 1
-                )
-                t = templates[key] = (idx, valid)
-            return t
-
-        def counts(flat_bands, n_px, width, r0, c0, size):
-            """Per-candidate (nonzero, eq-nodata, isinf) counts summed
-            over the 4 bands, valid cells only."""
-            idx, valid = template(n_px, width, r0, c0, size)
-            nz = np.zeros(len(r0), dtype=np.int64)
-            nine = np.zeros(len(r0), dtype=np.int64)
-            inf = np.zeros(len(r0), dtype=np.int64)
-            for b in range(flat_bands.shape[0]):
-                vals = flat_bands[b][idx]
-                nz += ((vals != 0.0) & valid).sum(axis=(1, 2))
-                nine += ((vals == -9999.0) & valid).sum(axis=(1, 2))
-                inf += (np.isinf(vals) & valid).sum(axis=(1, 2))
-            return nz, nine, inf
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            pid = batch.column("pair_id").to_numpy()
-            hrw_col = batch.column("hr_width").to_numpy()
-            lrw_col = batch.column("lr_width").to_numpy()
-            hr_flat = (
-                batch.column("hr_bands")
-                .flatten()
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, n_bands, -1)
-            )
-            lr_flat = (
-                batch.column("lr_bands")
-                .flatten()
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, n_bands, -1)
-            )
-            r0 = r_a - half
-            c0 = c_a - half
-            lr_r0 = r0 // scale
-            lr_c0 = c0 // scale
-            out_pid, out_ok, out_nz = [], [], []
-            for i in range(n):
-                nz_hr, _, inf_hr = counts(
-                    hr_flat[i],
-                    hr_flat.shape[2],
-                    int(hrw_col[i]),
-                    r0,
-                    c0,
-                    batch_size,
-                )
-                nz_lr, nine_lr, _ = counts(
-                    lr_flat[i],
-                    lr_flat.shape[2],
-                    int(lrw_col[i]),
-                    lr_r0,
-                    lr_c0,
-                    lr_size,
-                )
-                ok = (
-                    (nz_hr * 100 >= 99 * hr_px)
-                    & (nz_lr * 100 >= 99 * lr_px)
-                    & (nine_lr * 100 <= lr_px)
-                    & (inf_hr * 100 <= inf_denom)
-                )
-                out_pid.append(np.full(len(r_a), pid[i], dtype=np.int64))
-                out_ok.append(ok)
-                out_nz.append(nz_hr)
-            k = len(out_pid)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_pid), type=pa.int64()),
-                    pa.array(np.tile(ord_a, k), type=pa.int64()),
-                    pa.array(
-                        np.tile(r_a.astype(np.int32), k), type=pa.int32()
-                    ),
-                    pa.array(
-                        np.tile(c_a.astype(np.int32), k), type=pa.int32()
-                    ),
-                    pa.array(np.concatenate(out_ok), type=pa.bool_()),
-                    pa.array(np.concatenate(out_nz), type=pa.int64()),
-                ],
-                names=["pair_id", "ord", "r", "c", "ok", "nz_hr"],
-            )
-
-    return tensors.select(
-        "pair_id", "hr_bands", "hr_width", "lr_bands", "lr_width"
-    ).mapInArrow(run, "pair_id long, ord long, r int, c int, ok boolean, nz_hr long")
-
-
-def _greedy_kept_meta(
-    meta: DataFrame, batch_size: int, pct: float
-) -> DataFrame:
-    """The faithful per-pair greedy walk (operators/crops.py:
-    _greedy_walk — the same kernel suppress_overlap_greedy runs) over
-    the Arrow stage's metadata rows, CARRYING nz_hr through, so no
-    second slicing pass (and no join back to a re-evaluated subtree)
-    is needed to summarize survivors. Python sees ~30 B/candidate —
-    the boundary discipline test_plans pins."""
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from ..operators.crops import _greedy_walk
-
-    schema = StructType(
-        [
-            StructField("pair_id", LongType(), False),
-            StructField("r", IntegerType(), False),
-            StructField("c", IntegerType(), False),
-            StructField("nz_hr", LongType(), False),
-        ]
-    )
-
-    def walk(key, pdf):
-        pdf = pdf.sort_values("ord")
-        kept = _greedy_walk(
-            list(zip(pdf["r"], pdf["c"], pdf["ok"])),
-            batch_size,
-            pct,
-            overlap=True,
-        )
-        nz = {(r, c): z for r, c, z in zip(pdf["r"], pdf["c"], pdf["nz_hr"])}
-        return pd.DataFrame(
-            {
-                "pair_id": [key[0]] * len(kept),
-                "r": [k[0] for k in kept],
-                "c": [k[1] for k in kept],
-                "nz_hr": [nz[k] for k in kept],
-            }
-        )
-
-    return meta.groupBy("pair_id").applyInPandas(walk, schema)
-
-
-def _summarize_meta(kept: DataFrame) -> DataFrame:
-    """_summarize's exact output shape computed from walked metadata
-    (the nz_hr already counted by the Arrow stage) — byte-identical
-    columns, types, and ordering."""
-    return (
-        kept.groupBy("pair_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_crops"),
-            F.sum("r").cast("long").alias("sum_r"),
-            F.sum("c").cast("long").alias("sum_c"),
-            F.sum("nz_hr").cast("long").alias("nz_hr_total"),
-        )
-        .select(
-            F.col("pair_id").cast("long").alias("pair_id"),
-            "n_crops",
-            "sum_r",
-            "sum_c",
-            "nz_hr_total",
-        )
-        .orderBy("pair_id")
-    )
-
-
-def greedy_volume_meta_dataset(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The compat (greedy) volume pipeline on the r14 Arrow metadata
-    path: memoized tensors -> one mapInArrow candidate-stats stage ->
-    per-pair greedy walk (metadata only) -> summary. Result identical
-    to the retired HOF shape (oracle SQL_CROP_VOLUME_GREEDY unchanged;
-    A/B exceptAll proven empty both ways at sf0.01 and sf0.1)."""
-    from ..operators.dedup import _memo_checkpoint
-
-    p = params_for(sf_dir)
-    mask = volume_mask(spark, p["hrw"])
-    if p.get("memo", True):
-        tensors = _memo_checkpoint(
-            spark.range(1),
-            ("crop_volume_tensors", p["n_pairs"], p["hrw"], p["lrw"]),
-            lambda: volume_tensors(spark, p["n_pairs"], p["hrw"], p["lrw"]),
-        )
-    else:  # scale tier: regenerate, in ≤4-row slices so each Arrow
-        # input batch stays ~9 MB (the direct-memory budget in
-        # _greedy_candidate_meta_arrow's docstring)
-        tensors = volume_tensors(
-            spark,
-            p["n_pairs"],
-            p["hrw"],
-            p["lrw"],
-            slices=-(-p["n_pairs"] // 4),
-        )
-    centers = _collected_centers(mask, BATCH)
-    meta = _greedy_candidate_meta_arrow(tensors, centers, BATCH, SCALE)
-    return _summarize_meta(_greedy_kept_meta(meta, BATCH, PCT))
-
-
 def q_crop_volume_greedy(spark: SparkSession, sf: str) -> DataFrame:
     """E4 at volume, compat mode: the reference's sequential greedy
-    walk per pair (applyInPandas over centers only). The
-    order-dependent mutating-list semantics are not expressible as
-    plain relational SQL, but at the driver's sf0.01 fixture scale
-    (6 pairs x ~200 candidates) the walk IS expressible as a DuckDB
-    RECURSIVE CTE carrying (cursor, surviving-list, kept-list) state —
-    SQL_CROP_VOLUME_GREEDY below — which seals this entry with a full
-    rows+schema+hash oracle (the same move that closed stream_sessions
-    in round 4). The walk is additionally pinned by seed/order unit
-    tests (tests/test_crop_engine.py) and its native twin
-    `crop_volume`.
-
-    r14 (optimization round 2, entry in the checked prefix): executes
-    on the Arrow metadata path (greedy_volume_meta_dataset) — same
-    walk kernel, same oracle, results proven identical; the HOF
-    phase-1/phase-2 shape this replaces is retained by the tail-pinned
-    native twin `crop_volume` (crop_volume_dataset)."""
-    return greedy_volume_meta_dataset(spark, sf)
+    walk per pair, run inside the crop kernel (crop_pairs) on each pair
+    row. The order-dependent mutating-list semantics are not
+    expressible as plain relational SQL, but at the driver's sf0.01
+    fixture scale (6 pairs x ~200 candidates) the walk IS expressible as
+    a DuckDB RECURSIVE CTE carrying (cursor, surviving-list, kept-list)
+    state — SQL_CROP_VOLUME_GREEDY below — which seals this entry with a
+    full rows+schema+hash oracle. The walk is additionally pinned by
+    seed/order unit tests (tests/test_crop_engine.py) and its native
+    twin `crop_volume`, which runs the same kernel in grid mode."""
+    return _summarize(crop_volume_dataset(spark, sf, compat=True))
 
 
 # Oracle for the native path, GENERATED from the fixture parameters so
@@ -605,9 +322,9 @@ SQL_CROP_VOLUME = scale_oracle_sql(6, 64, 21)
 # - compat bounds (op 13 as-built): the upper limits come from the
 #   centerline COUNT (256 points -> 256-1-6 = 249), not the raster
 #   dims, so edge centers up to r,c = 63 survive the bounds filter and
-#   their windows leave the 64x64 frame. slice2d truncates those like
-#   NumPy (rows past the bottom vanish, columns clamp at the right
-#   edge), so hstat/lstat count only PRESENT cells (the 2-D bounds in
+#   their windows leave the 64x64 frame. The kernel truncates those as
+#   NumPy slices do (rows past the bottom vanish, columns clamp at the
+#   right edge), so hstat/lstat count only PRESENT cells (the 2-D bounds in
 #   their WHERE) while the quality denominators stay fixed at
 #   576/64/192 — truncated crops fail the gate exactly as the
 #   reference's short NumPy slices do.
@@ -732,22 +449,15 @@ SQL_CROP_VOLUME_GREEDY = greedy_oracle_sql(6)
 
 
 def greedy_scale_twin(spark: SparkSession, n_pairs: int = 60) -> DataFrame:
-    """The greedy walk's at-scale correctness twin (round-6 VERDICT
-    item 4): the SAME compat pipeline (tensors -> slices -> quality ->
-    sequential per-pair greedy walk -> summary) over the driver
-    fixture's raster shape with 10x the PAIR count — the axis the
-    operator scales along in production (pairs partition freely;
-    per-pair candidate count is bounded by mask density by design, so
-    it does not grow with corpus size). Checked by
+    """The greedy walk's at-scale correctness twin: the SAME compat
+    pipeline as q_crop_volume_greedy (tensors -> crop kernel ->
+    summary) over the driver fixture's raster shape with more PAIRS —
+    the axis the operator scales along in production (pairs partition
+    freely; per-pair candidate count is bounded by mask density by
+    design, so it does not grow with corpus size). Checked by
     scripts/verify_scale.py against greedy_oracle_sql(n_pairs); the
     candidate-count axis stays sealed at sf0.01 where the recursive
-    oracle's quadratic state is tractable.
-
-    r14: runs the Arrow metadata path — the twin must prove the code
-    the registry entry actually executes, so it moved together with
-    q_crop_volume_greedy (same walk kernel, same summary shape)."""
-    mask = volume_mask(spark, 64)
+    oracle's quadratic state is tractable."""
     tensors = volume_tensors(spark, n_pairs, 64, 21, slices=-(-n_pairs // 4))
-    centers = _collected_centers(mask, BATCH)
-    meta = _greedy_candidate_meta_arrow(tensors, centers, BATCH, SCALE)
-    return _summarize_meta(_greedy_kept_meta(meta, BATCH, PCT))
+    cfg = CropConfig(batch_size=BATCH, scale=SCALE, pct_overlap=PCT, compat=True)
+    return _summarize(build_crop_dataset(tensors, volume_mask(spark, 64), cfg))

@@ -1605,14 +1605,10 @@ def q_crop_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     (ops 35 -> 13 -> 20/43/44 -> 14/26 -> 33-grid) on fixture stand-ins:
     vec 0's sign pattern is the 8x8 centerline mask; every embedding is
     an 8x8 HR raster whose first 16 values double as the 4x4 LR raster
-    (scale 2). Mask explode -> bounds filter -> aligned HR/LR slices ->
-    integer-exact quality predicate -> grid overlap suppression."""
-    from ..operators.crops import (
-        candidate_centers,
-        quality_flag,
-        slice_crop_pairs,
-        suppress_overlap_grid,
-    )
+    (scale 2). Mask explode -> bounds filter -> one crop kernel call per
+    pair: integer-exact quality predicate (compat inf denominator) ->
+    grid overlap suppression -> aligned HR/LR slices of the survivors."""
+    from ..operators.crops import candidate_centers, crop_pairs
 
     e = table(spark, sf, "embeddings")
     mask = e.filter(F.col("vec_id") == 0).select(
@@ -1631,21 +1627,22 @@ def q_crop_pipeline(spark: SparkSession, sf: str) -> DataFrame:
         F.array(F.slice("embedding", 1, 16)).alias("lr_bands"),
         F.lit(4).alias("lr_width"),
     )
-    sliced = slice_crop_pairs(pairs, centers, batch_size=4, scale=2)
-    flagged = sliced.withColumn(
-        "ok", quality_flag(batch_size=4, scale=2, n_bands=1, compat=True)
+    out = crop_pairs(
+        pairs,
+        centers,
+        batch_size=4,
+        scale=2,
+        pct=0.7,  # stride 2
+        greedy=False,
+        compat_quality=True,
+        n_bands=1,
     )
-    # keep_payload: the survivor row carries its crops — no join back
-    # onto flagged (which would recompute the slice subtree)
-    out = suppress_overlap_grid(
-        flagged, batch_size=4, pct=0.7, keep_payload=True  # stride 2
-    )
-    hr = F.element_at("hr_crop", 1)
-    lr = F.element_at("lr_crop", 1)
+    hr = F.element_at("hr_pixels", 1)
+    lr = F.element_at("lr_pixels", 1)
     return out.select(
         F.col("pair_id").cast("long"),
-        F.col("r").cast("long"),
-        F.col("c").cast("long"),
+        F.col("center_r").cast("long").alias("r"),
+        F.col("center_c").cast("long").alias("c"),
         F.size(F.filter(hr, lambda x: x > 0)).cast("long").alias("n_pos_hr"),
         F.size(F.filter(lr, lambda x: x > 0)).cast("long").alias("n_pos_lr"),
     ).orderBy("pair_id", "r", "c")

@@ -5,24 +5,22 @@ The oracle below reimplements the studied behavior of the reference's
 the as-built quirks (count-based bounds, mixed inf denominator, row/col
 band purge, mutating-list cursor walk) — on FIXTURES.md-shaped synthetic
 rasters (batch=12, scale=3, pct=0.7, HR 60x60, LR 20x20, planted
-zero/-9999/inf contamination). The Spark pipeline must agree on
-candidate sets, per-candidate quality flags, greedy-kept centers, and
-exact crop pixel values.
+zero/-9999/inf contamination). The crop kernel must agree on candidate
+sets, per-candidate quality flags (its in-kernel ``candidate_flags`` and
+the survivors it emits), greedy-kept centers, grid survivors, and exact
+crop pixel values.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from sentinel_landsat_database_creation_spark.operators.crops import (
     NODATA,
     candidate_centers,
-    quality_flag,
-    slice_crop_pairs,
-    suppress_overlap_greedy,
-    suppress_overlap_grid,
+    candidate_flags,
+    crop_pairs,
 )
 
 BATCH, SCALE, PCT = 12, 3, 0.7
@@ -126,6 +124,31 @@ def oracle_walk(cands, ok_fn, overlap=True):
 # Spark pipeline fixtures
 
 
+def _pairs_df(spark, hr, lr, mask_id=None, pair_id=1):
+    cols = "pair_id long, " + ("mask_id string, " if mask_id else "")
+    row = (pair_id,) + ((mask_id,) if mask_id else ()) + (
+        [b.ravel().tolist() for b in hr],
+        hr.shape[2],
+        [b.ravel().tolist() for b in lr],
+        lr.shape[2],
+    )
+    return spark.createDataFrame(
+        [row],
+        cols + "hr_bands array<array<float>>, hr_width int, "
+        "lr_bands array<array<float>>, lr_width int",
+    )
+
+
+def _kernel(pairs, centers, greedy=True, **kw):
+    return crop_pairs(
+        pairs, centers, BATCH, SCALE, PCT, greedy=greedy, compat_quality=True, **kw
+    )
+
+
+def _centers_of(df):
+    return sorted((r["center_r"], r["center_c"]) for r in df.collect())
+
+
 @pytest.fixture(scope="module")
 def pipeline(spark):
     hr, lr, mask = _hr(), _lr(), _mask()
@@ -133,71 +156,55 @@ def pipeline(spark):
         [("m1", HR_N, HR_N, [int(v) for v in mask.ravel()])],
         "mask_id string, height int, width int, pixels array<int>",
     )
-    pairs_df = spark.createDataFrame(
-        [
-            (
-                1,
-                [hr[i].ravel().tolist() for i in range(N_BANDS)],
-                HR_N,
-                [lr[i].ravel().tolist() for i in range(N_BANDS)],
-                LR_N,
-            )
-        ],
-        "pair_id long, hr_bands array<array<float>>, hr_width int, "
-        "lr_bands array<array<float>>, lr_width int",
-    )
     centers = candidate_centers(mask_df, BATCH, compat_bounds=True)
-    sliced = slice_crop_pairs(pairs_df, centers, BATCH, SCALE)
-    flagged = sliced.withColumn(
-        "ok", quality_flag(BATCH, SCALE, N_BANDS, compat=True)
-    )
-    return hr, lr, mask, flagged
+    return hr, lr, mask, _pairs_df(spark, hr, lr), centers
 
 
-def test_candidate_centers_match_oracle(pipeline, spark):
-    hr, lr, mask, flagged = pipeline
-    got = sorted(
-        (r["r"], r["c"]) for r in flagged.select("r", "c").distinct().collect()
-    )
-    assert got == sorted(oracle_candidates(mask))
+def test_candidate_centers_match_oracle(pipeline):
+    hr, lr, mask, pairs, centers = pipeline
+    got = [(r["r"], r["c"]) for r in centers.orderBy("ord").collect()]
+    assert got == oracle_candidates(mask)
 
 
 def test_quality_flags_match_oracle(pipeline):
-    hr, lr, mask, flagged = pipeline
-    rows = flagged.select("r", "c", "ok").collect()
-    assert len(rows) > 0
-    n_fail = sum(1 for r in rows if not r["ok"])
-    assert 0 < n_fail < len(rows), "fixture must exercise both outcomes"
-    for row in rows:
-        assert row["ok"] == oracle_quality(hr, lr, row["r"], row["c"]), (
-            row["r"],
-            row["c"],
-        )
+    """The kernel's own flag function, per candidate, against the
+    oracle — and the kernel's survivors with overlap off are exactly the
+    oracle-passing candidates."""
+    hr, lr, mask, pairs, centers = pipeline
+    cands = oracle_candidates(mask)
+    assert len(cands) > 0
+    r = np.array([x[0] for x in cands])
+    c = np.array([x[1] for x in cands])
+    flags = candidate_flags(hr, lr, r, c, BATCH, SCALE, N_BANDS, compat=True)
+    want = [oracle_quality(hr, lr, rr, cc) for rr, cc in cands]
+    assert flags.tolist() == want
+    assert 0 < sum(want) < len(want), "fixture must exercise both outcomes"
+    emitted = _centers_of(_kernel(pairs, centers, overlap=False))
+    assert emitted == sorted(x for x, ok in zip(cands, want) if ok)
 
 
 def test_crop_pixels_exact(pipeline):
-    hr, lr, mask, flagged = pipeline
-    half = BATCH // 2
-    for row in flagged.orderBy("ord").limit(5).collect():
-        rr, cc = row["r"], row["c"]
+    hr, lr, mask, pairs, centers = pipeline
+    half, s = BATCH // 2, BATCH // SCALE
+    rows = _kernel(pairs, centers, overlap=False).collect()
+    assert len(rows) > 5
+    for row in rows:
+        rr, cc = row["center_r"], row["center_c"]
         exp_hr = hr[:, rr - half : rr + half, cc - half : cc + half]
-        got_hr = np.array(row["hr_crop"], dtype=np.float32).reshape(
+        got_hr = np.array(row["hr_pixels"], dtype=np.float32).reshape(
             N_BANDS, BATCH, BATCH
         )
         assert np.array_equal(exp_hr, got_hr, equal_nan=True)
         r1, c1 = (rr - half) // SCALE, (cc - half) // SCALE
-        s = BATCH // SCALE
         exp_lr = lr[:, r1 : r1 + s, c1 : c1 + s]
-        got_lr = np.array(row["lr_crop"], dtype=np.float32).reshape(
-            N_BANDS, s, s
-        )
+        got_lr = np.array(row["lr_pixels"], dtype=np.float32).reshape(N_BANDS, s, s)
         assert np.array_equal(exp_lr, got_lr)
+        assert row["hr_size"] == BATCH and row["lr_size"] == s
 
 
 def test_greedy_suppression_matches_oracle(pipeline):
-    hr, lr, mask, flagged = pipeline
-    kept = suppress_overlap_greedy(flagged, BATCH, PCT)
-    got = sorted((r["r"], r["c"]) for r in kept.collect())
+    hr, lr, mask, pairs, centers = pipeline
+    got = _centers_of(_kernel(pairs, centers))
     expect = sorted(
         oracle_walk(
             oracle_candidates(mask), lambda r, c: oracle_quality(hr, lr, r, c)
@@ -208,9 +215,8 @@ def test_greedy_suppression_matches_oracle(pipeline):
 
 
 def test_greedy_no_overlap_keeps_all_passing(pipeline):
-    hr, lr, mask, flagged = pipeline
-    kept = suppress_overlap_greedy(flagged, BATCH, PCT, overlap=False)
-    got = sorted((r["r"], r["c"]) for r in kept.collect())
+    hr, lr, mask, pairs, centers = pipeline
+    got = _centers_of(_kernel(pairs, centers, overlap=False))
     expect = sorted(
         oracle_walk(
             oracle_candidates(mask),
@@ -222,40 +228,63 @@ def test_greedy_no_overlap_keeps_all_passing(pipeline):
 
 
 def test_grid_suppression_properties(pipeline):
-    hr, lr, mask, flagged = pipeline
-    kept = suppress_overlap_grid(flagged, BATCH, PCT)
-    rows = [(r["r"], r["c"]) for r in kept.collect()]
+    hr, lr, mask, pairs, centers = pipeline
+    rows = _centers_of(_kernel(pairs, centers, greedy=False))
     assert len(rows) > 0
     stride = int(BATCH * PCT)
     cells = {(r // stride, c // stride) for r, c in rows}
     assert len(cells) == len(rows), "one survivor per grid cell"
     for r, c in rows:
         assert oracle_quality(hr, lr, r, c)
+    best = {}
+    for r, c in oracle_candidates(mask):
+        if oracle_quality(hr, lr, r, c):
+            cell = (r // stride, c // stride)
+            best[cell] = min(best.get(cell, (r, c)), (r, c))
+    assert rows == sorted(best.values()), "minimum (r, c) per cell"
 
 
-def test_shuffle_variant_deterministic(pipeline):
-    hr, lr, mask, flagged = pipeline
-    a = sorted(
-        (r["r"], r["c"])
-        for r in suppress_overlap_greedy(
-            flagged, BATCH, PCT, shuffle_seed=42
-        ).collect()
+def test_shuffle_variant_deterministic(spark, pipeline):
+    """The seeded shuffle permutes the ord-sorted list, so the same seed
+    keeps the same crops however the candidate rows arrive."""
+    hr, lr, mask, pairs, centers = pipeline
+    rows = [tuple(r) for r in centers.select("mask_id", "ord", "r", "c").collect()]
+    schema = "mask_id string, ord long, r int, c int"
+    fwd = spark.createDataFrame(sorted(rows, key=lambda t: t[1]), schema)
+    rev = spark.createDataFrame(sorted(rows, key=lambda t: -t[1]), schema)
+    got = [
+        _centers_of(_kernel(pairs, cdf.coalesce(1), shuffle_seed=42))
+        for cdf in (fwd, rev, fwd)
+    ]
+    assert got[0] == got[1] == got[2] and len(got[0]) > 0
+
+
+def test_truncated_edge_crop_keeps_short_shape(spark):
+    """batch_size >= 100: a crop one row short of the bottom edge still
+    holds 99% of its cells and passes the fixed-denominator gate, and
+    its payload keeps slice2d's short-crop shape (99 x 100 per band).
+    Two rows short fails the gate."""
+    b, s = 100, 2
+    hr = (np.arange(150 * 150, dtype=np.float32).reshape(1, 150, 150) % 7) + 1
+    lr = (np.arange(75 * 75, dtype=np.float32).reshape(1, 75, 75) % 5) + 1
+    pairs = _pairs_df(spark, hr, lr)
+    centers = spark.createDataFrame(
+        [(1, 0, 101, 60), (1, 1, 102, 60)], "mask_id int, ord long, r int, c int"
     )
-    b = sorted(
-        (r["r"], r["c"])
-        for r in suppress_overlap_greedy(
-            flagged, BATCH, PCT, shuffle_seed=42
-        ).collect()
-    )
-    assert a == b and len(a) > 0
+    rows = crop_pairs(
+        pairs, centers, b, s, 0.7, greedy=True, n_bands=1, overlap=False
+    ).collect()
+    assert [(r["center_r"], r["center_c"]) for r in rows] == [(101, 60)]
+    (got_hr,), (got_lr,) = rows[0]["hr_pixels"], rows[0]["lr_pixels"]
+    assert len(got_hr) == 99 * 100 and len(got_lr) == 50 * 50
+    assert np.array_equal(np.array(got_hr, np.float32), hr[0, 51:151, 10:110].ravel())
+    assert np.array_equal(np.array(got_lr, np.float32), lr[0, 25:75, 5:55].ravel())
 
 
 def test_mask_keyed_pairs_do_not_leak_centers(spark):
     """Two masks, two pairs keyed by mask_id: each pair must meet ONLY
     its own mask's centers (VERDICT r1 item 5 — unkeyed, a second mask
     handed every pair the union of all centers)."""
-    # mask A: centerline at row 4; mask B: centerline at column 5
-    import numpy as np
 
     def mask_pixels(kind):
         m = np.zeros((HR_N, HR_N), dtype=int)
@@ -273,45 +302,21 @@ def test_mask_keyed_pairs_do_not_leak_centers(spark):
         "mask_id string, height int, width int, pixels array<int>",
     )
     hr, lr = _hr(), _lr()
-    pairs = spark.createDataFrame(
-        [
-            (
-                1,
-                "mA",
-                [hr[i].ravel().tolist() for i in range(N_BANDS)],
-                HR_N,
-                [lr[i].ravel().tolist() for i in range(N_BANDS)],
-                LR_N,
-            ),
-            (
-                2,
-                "mB",
-                [hr[i].ravel().tolist() for i in range(N_BANDS)],
-                HR_N,
-                [lr[i].ravel().tolist() for i in range(N_BANDS)],
-                LR_N,
-            ),
-        ],
-        "pair_id long, mask_id string, hr_bands array<array<float>>, "
-        "hr_width int, lr_bands array<array<float>>, lr_width int",
+    # one partition: both pairs reach the kernel in the same Arrow batch
+    pairs = (
+        _pairs_df(spark, hr, lr, "mA", 1)
+        .union(_pairs_df(spark, hr, lr, "mB", 2))
+        .coalesce(1)
     )
     centers = candidate_centers(masks, BATCH, compat_bounds=False)
-    by_mask = {
-        mid: {(r["r"], r["c"]) for r in rows}
-        for mid, rows in (
-            ("mA", centers.filter(centers.mask_id == "mA").collect()),
-            ("mB", centers.filter(centers.mask_id == "mB").collect()),
-        )
-    }
+    by_mask = {mid: set() for mid in ("mA", "mB")}
+    for row in centers.collect():
+        by_mask[row["mask_id"]].add((row["r"], row["c"]))
     assert by_mask["mA"] and by_mask["mB"] and by_mask["mA"] != by_mask["mB"]
 
-    sliced = slice_crop_pairs(pairs, centers, BATCH, SCALE)
-    got = {
-        pid: {(r["r"], r["c"]) for r in rows}
-        for pid, rows in (
-            (1, sliced.filter(sliced.pair_id == 1).collect()),
-            (2, sliced.filter(sliced.pair_id == 2).collect()),
-        )
-    }
-    assert got[1] == by_mask["mA"], "pair 1 must see only mask A centers"
-    assert got[2] == by_mask["mB"], "pair 2 must see only mask B centers"
+    crops = _kernel(pairs, centers, overlap=False)
+    for pid, mid in ((1, "mA"), (2, "mB")):
+        got = set(_centers_of(crops.filter(crops.pair_id == pid)))
+        want = {x for x in by_mask[mid] if oracle_quality(hr, lr, *x)}
+        assert want, f"mask {mid} must keep some crops"
+        assert got == want, f"pair {pid} must see only mask {mid} centers"

@@ -7,6 +7,8 @@ the parquet scan, column pruning, broadcast joins for small dimensions
 
 from __future__ import annotations
 
+import pytest
+
 from sentinel_landsat_database_creation_spark.plans.driver_queries import REGISTRY
 
 SF = "/root/testdata/sf0.01"
@@ -290,46 +292,62 @@ def test_length_trim_window_is_over_grouped_lengths(spark):
     )
 
 
-def test_greedy_walk_python_boundary_is_centers_only(spark):
-    """VERDICT r3 item 5, re-pinned for the r14 Arrow metadata path:
-    the E4 greedy suppression must hand the walk's Python boundary
-    (FlatMapGroupsInPandas) METADATA rows only — (pair_id, r, c, ord,
-    ok, nz_hr) — never the band payloads; the band payload crosses
-    into Python exactly ONCE, at the MapInArrow candidate-stats stage
-    (guide §8: heavy bytes move once, decisions flow as metadata); and
-    NO Exchange anywhere in the plan carries a band column (pixels
-    never shuffle — the rule that predates both shapes)."""
-    from sentinel_landsat_database_creation_spark.plans.crop_volume import (
-        greedy_volume_meta_dataset,
+def _plan_nodes(df) -> list:
+    """Every operator of ``df``'s executed physical plan (AQE's current
+    plan when adaptive), as JVM SparkPlan objects."""
+    nodes = []
+
+    def walk(p):
+        if p.nodeName() == "AdaptiveSparkPlan":
+            return walk(p.executedPlan())
+        nodes.append(p)
+        kids = p.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return nodes
+
+
+def _crop_entry(spark, tmp_path, entry: str):
+    if entry != "satellite_e2e":
+        return REGISTRY[entry][0](spark, SF)
+    from test_satellite_e2e import E2E_CROPS, e2e_fixture
+
+    from sentinel_landsat_database_creation_spark.plans.satellite import (
+        build_crop_dataset,
     )
 
-    df = greedy_volume_meta_dataset(spark, "/root/testdata/sf0.01")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInArrow") == 1, "exactly one payload crossing"
-    assert "FlatMapGroupsInPandas" in plan
-    for line in plan.splitlines():
-        if "FlatMapGroupsInPandas" in line:
-            assert "hr_bands" not in line and "lr_bands" not in line
-            assert "pair_id" in line and "ok" in line
-        if "Exchange" in line:
-            assert "hr_bands" not in line and "lr_bands" not in line
+    fx = e2e_fixture(spark, tmp_path)
+    # stage 4 starts from the stage-3 Parquet handoff, so the plan under
+    # test is the crop engine's own
+    path = str(tmp_path / "tensors")
+    fx["tensors"].write.parquet(path)
+    return build_crop_dataset(spark.read.parquet(path), fx["mask"], E2E_CROPS)
 
 
-def test_crop_volume_native_no_python_and_metadata_shuffle(spark):
-    """Native volume path: zero Python eval anywhere, and the
-    suppression exchange moves metadata-sized rows (no crop columns in
-    any Exchange's output), so pixel payloads never shuffle."""
-    from sentinel_landsat_database_creation_spark.plans.crop_volume import (
-        crop_volume_dataset,
-    )
-
-    df = crop_volume_dataset(spark, "/root/testdata/sf0.01", compat=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "FlatMapGroupsInPandas" not in plan
-    for line in plan.splitlines():
-        if "Exchange" in line:
-            assert "hr_crop" not in line and "lr_crop" not in line
+@pytest.mark.parametrize(
+    "entry", ["crop_volume", "crop_volume_greedy", "crop_pipeline", "satellite_e2e"]
+)
+def test_crop_entry_python_boundary_and_payload_discipline(spark, tmp_path, entry):
+    """Every crop entry runs stage 4 as ONE per-pair mapInArrow kernel:
+    the band payload crosses into Python exactly once, no other Python
+    evaluation (grouped pandas walk, row UDF) exists, and no exchange
+    carries a band or crop pixel column — decisions are made per pair
+    inside the kernel, so pixels never shuffle."""
+    nodes = _plan_nodes(_crop_entry(spark, tmp_path, entry))
+    names = [n.nodeName() for n in nodes]
+    assert names.count("MapInArrow") == 1, names
+    assert not {"FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"} & set(
+        names
+    ), names
+    payload = {"hr_bands", "lr_bands", "hr_pixels", "lr_pixels"}
+    exchanges = [n for n in nodes if "Exchange" in n.nodeName()]
+    assert exchanges, "the centers side always exchanges; the walk must see it"
+    for n in exchanges:
+        out = n.output()
+        cols = {out.apply(i).name() for i in range(out.size())}
+        assert not cols & payload, (n.nodeName(), sorted(cols))
 
 
 def test_blocked_pairs_keeps_full_reducer_width(spark):

@@ -534,20 +534,13 @@ def test_pack_sequences_matches_sequential_reference(spark, sizes, budget, shard
 
 
 # ---------------------------------------------------------------------------
-# slice_crop_pairs chunk-boundary math (round-5 VERDICT item 8): the
-# chunk explode (ceil(n/centers_per_chunk) slices of the collected
-# center array) is the one expression subtree the volume fixtures pin
-# only through aggregate hashes. This drives n across every boundary
-# shape (n % cp in {0, 1, cp-1}, n < cp, n = cp) against a direct
-# per-center Python reference of the slice semantics (including the
-# NumPy-faithful right-edge clamp and bottom truncation).
-
-_cp_centers = st.lists(
-    st.tuples(st.integers(2, 7), st.integers(2, 7)),
-    min_size=1,
-    max_size=9,
-    unique=True,
-)
+# The crop kernel's window arithmetic (operators/crops.py): cut_window's
+# NumPy basic slice must equal slice2d's per-row semantics (rows past
+# the bottom vanish, the right edge clamps instead of wrapping into the
+# next row of the flattened buffer), and window_counts' summed-area
+# table must equal a brute-force count over the cells the cut holds —
+# for windows anywhere in the frame, at its edges, and hanging past
+# them.
 
 
 def _ref_slice2d(flat, width, r0, c0, h, w):
@@ -561,41 +554,53 @@ def _ref_slice2d(flat, width, r0, c0, h, w):
     return out
 
 
-@settings(max_examples=12, deadline=None)
-@given(_cp_centers, st.integers(min_value=1, max_value=4))
-def test_slice_crop_pairs_chunk_boundaries(spark, centers, cp):
+@settings(max_examples=60, deadline=None)
+@given(
+    st.integers(1, 9),
+    st.integers(1, 9),
+    st.integers(1, 3),
+    st.integers(1, 6),
+    st.data(),
+)
+def test_crop_kernel_window_cut_and_counts_at_frame_edges(h, w, nb, size, data):
+    import numpy as np
+
     from sentinel_landsat_database_creation_spark.operators.crops import (
-        slice_crop_pairs,
+        cut_window,
+        window_counts,
     )
 
-    W, B, S = 8, 4, 2
-    LW = W // S
-    hr = [float(i % 97) + 1.0 for i in range(W * W)]
-    lr = [float((i * 7) % 89) + 1.0 for i in range(LW * LW)]
-    pairs = spark.createDataFrame(
-        [(1, [hr], W, [lr], LW)],
-        "pair_id long, hr_bands array<array<double>>, hr_width int, "
-        "lr_bands array<array<double>>, lr_width int",
-    )
-    cdf = spark.createDataFrame(
-        [(1, i, r, c) for i, (r, c) in enumerate(centers)],
-        "mask_id int, ord long, r int, c int",
-    )
-    got = {
-        (row["r"], row["c"]): (row["hr_crop"][0], row["lr_crop"][0])
-        for row in slice_crop_pairs(
-            pairs, cdf, batch_size=B, scale=S, centers_per_chunk=cp
-        ).collect()
-    }
-    assert len(got) == len(centers)
-    half = B // 2
-    for r, c in centers:
-        want_hr = _ref_slice2d(hr, W, r - half, c - half, B, B)
-        want_lr = _ref_slice2d(
-            lr, LW, (r - half) // S, (c - half) // S, B // S, B // S
+    vals = data.draw(
+        st.lists(
+            st.sampled_from([0.0, 1.5, -9999.0, float("inf")]),
+            min_size=nb * h * w,
+            max_size=nb * h * w,
         )
-        assert got[(r, c)][0] == want_hr, (r, c, cp)
-        assert got[(r, c)][1] == want_lr, (r, c, cp)
+    )
+    a = np.array(vals, np.float32).reshape(nb, h, w)
+    corners = data.draw(
+        st.lists(
+            st.tuples(st.integers(0, h + 1), st.integers(0, w + 1)),
+            min_size=1,
+            max_size=6,
+        )
+    )
+    r0 = np.array([x[0] for x in corners])
+    c0 = np.array([x[1] for x in corners])
+    ind = (a != 0).sum(axis=0)
+    counts = window_counts(ind, r0, c0, size)
+    for k, (y, x) in enumerate(corners):
+        crop = cut_window(a, y, x, size)
+        for band in range(nb):
+            want = _ref_slice2d(a[band].ravel().tolist(), w, y, x, size, size)
+            assert crop[band].ravel().tolist() == want, (y, x, band)
+        brute = sum(
+            int(a[band, i, j] != 0)
+            for band in range(nb)
+            for i in range(y, min(y + size, h))
+            for j in range(x, min(x + size, w))
+        )
+        assert counts[k] == brute, (y, x)
 
 
 # ---------------------------------------------------------------------------

@@ -46,21 +46,14 @@ def _make_tree(tmp_path):
     return str(s2_root), str(hls_root)
 
 
-def test_satellite_pipeline_end_to_end(spark, tmp_path):
+def e2e_fixture(spark, tmp_path) -> dict:
+    """The fixture's frames through every stage up to the crop engine:
+    band files, scene pairs, pair tensors and the diagonal centerline
+    mask (compat bounds keep r=c in 4..7)."""
     s2_root, hls_root = _make_tree(tmp_path)
-
-    # ops 1/2: binaryFile listing (xml/jpg never reach the decode)
     s2_files = scene_file_listing(spark, s2_root)
-    assert {r["scene"] for r in s2_files.collect()} == {S2_SCENE}
     s2_bands = filter_band_files(s2_files, S2_BANDS)
     hls_bands = filter_band_files(scene_file_listing(spark, hls_root), HLS_BANDS)
-    assert s2_bands.count() == 4 and hls_bands.count() == 4
-    # deterministic channel order (op 11's fix)
-    ranks = {
-        r["band"]: r["band_rank"] for r in s2_bands.collect()
-    }
-    assert ranks == {"B2": 1, "B3": 2, "B4": 3, "B8": 4}
-
     # op 4 plumbing + op 42: decode (stand-in) and stack; S2 at 12x12,
     # HLS at 4x4 -> scale ratio 3. band_rank re-attaches by (scene,
     # band) key after the decode boundary.
@@ -70,24 +63,11 @@ def test_satellite_pipeline_end_to_end(spark, tmp_path):
     hls_rasters = decode_fake(hls_bands, height=4, width=4).join(
         hls_bands.select("scene", "band", "band_rank"), ["scene", "band"]
     )
-
     # stages 1-2: catalogs + week-class pairing from the dir listings
     pairs = build_scene_pairs(
         spark.createDataFrame([(S2_SCENE,)], "data string"),
         spark.createDataFrame([(HLS_SCENE,)], "data string"),
     )
-    prow = pairs.collect()
-    assert len(prow) == 1  # same epoch week (2023-03-15 / doy 074)
-    assert prow[0]["s2_scene"] == S2_SCENE
-    assert prow[0]["hls_scene"] == HLS_SCENE
-
-    tensors = build_pair_tensors(pairs, s2_rasters, hls_rasters)
-    trow = tensors.collect()
-    assert len(trow) == 1
-    assert len(trow[0]["hr_bands"]) == 4 and len(trow[0]["hr_bands"][0]) == 144
-    assert len(trow[0]["lr_bands"]) == 4 and len(trow[0]["lr_bands"][0]) == 16
-
-    # stage 4: diagonal centerline mask; compat bounds keep r=c in 4..7
     mask_px = [0.0] * 144
     for i in range(12):
         mask_px[i * 12 + i] = 1.0
@@ -95,9 +75,45 @@ def test_satellite_pipeline_end_to_end(spark, tmp_path):
         [(1, 12, 12, mask_px)],
         "mask_id long, height int, width int, pixels array<double>",
     )
-    crops = build_crop_dataset(
-        tensors, mask, CropConfig(batch_size=6, scale=3, compat=True)
-    )
+    return {
+        "s2_files": s2_files,
+        "s2_bands": s2_bands,
+        "hls_bands": hls_bands,
+        "pairs": pairs,
+        "tensors": build_pair_tensors(pairs, s2_rasters, hls_rasters),
+        "mask": mask,
+    }
+
+
+E2E_CROPS = CropConfig(batch_size=6, scale=3, compat=True)
+
+
+def test_satellite_pipeline_end_to_end(spark, tmp_path):
+    fx = e2e_fixture(spark, tmp_path)
+
+    # ops 1/2: binaryFile listing (xml/jpg never reach the decode)
+    assert {r["scene"] for r in fx["s2_files"].collect()} == {S2_SCENE}
+    s2_bands = fx["s2_bands"]
+    assert s2_bands.count() == 4 and fx["hls_bands"].count() == 4
+    # deterministic channel order (op 11's fix)
+    ranks = {
+        r["band"]: r["band_rank"] for r in s2_bands.collect()
+    }
+    assert ranks == {"B2": 1, "B3": 2, "B4": 3, "B8": 4}
+
+    prow = fx["pairs"].collect()
+    assert len(prow) == 1  # same epoch week (2023-03-15 / doy 074)
+    assert prow[0]["s2_scene"] == S2_SCENE
+    assert prow[0]["hls_scene"] == HLS_SCENE
+
+    tensors = fx["tensors"]
+    trow = tensors.collect()
+    assert len(trow) == 1
+    assert len(trow[0]["hr_bands"]) == 4 and len(trow[0]["hr_bands"][0]) == 144
+    assert len(trow[0]["lr_bands"]) == 4 and len(trow[0]["lr_bands"][0]) == 16
+
+    # stage 4: diagonal centerline mask; compat bounds keep r=c in 4..7
+    crops = build_crop_dataset(tensors, fx["mask"], E2E_CROPS)
     rows = crops.collect()
     centers = sorted((r["center_r"], r["center_c"]) for r in rows)
     assert centers == [(4, 4), (5, 5), (6, 6), (7, 7)]
