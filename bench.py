@@ -226,15 +226,9 @@ _LOAD_GUARD_DEFAULT = 2.0
 
 # How many leading registry entries get an uncharged warm-up pass
 # before the measured loop (see the comment at the call site: the
-# shared-JVM JIT warm-up reaches ~20 entries deep on a freshly
-# rotated prefix; measured r14). Override for experiments via
-# SPARK_GRAFT_WARMUP_PREFIX; 1 reproduces the r7..r13 methodology.
-try:
-    _WARMUP_PREFIX = max(
-        1, int(os.environ.get("SPARK_GRAFT_WARMUP_PREFIX", "20"))
-    )
-except ValueError:
-    _WARMUP_PREFIX = 20
+# shared-JVM JIT warm-up reaches ~20 entries deep into the registry;
+# measured r14).
+_WARMUP_PREFIX = 20
 
 
 def _start_contended() -> str | None:
@@ -400,22 +394,15 @@ def main() -> None:
 
     # The documented contract is WARM-state plan costs (per-query
     # numbers must not swing with registry order), but JIT/codegen
-    # warm-up used to land on whichever queries ran first — invisible
-    # while the prefix order was stable, a spray of spurious 2-4x
-    # "regressions" the round the registry rotated (r7). One uncharged
-    # cold pass of the first registry entry absorbed the bulk of it —
-    # but the r14 rotation MEASURED the residual: with the single
-    # first-entry pass, entries ~2-20 of the freshly rotated prefix
-    # still carried 1.2-2.6x of shared-JVM warm-up (catalog_event_
-    # labels 0.70 -> 1.85 in TWO independent runs, isolated median
-    # 0.7-class; the same mechanism retroactively explains every r13
-    # committed-baseline "outlier" — all sat early in the r13 prefix).
-    # C2 compilation of the shared planner/codegen infrastructure
-    # takes tens of seconds of jobs, not one. The uncharged pass now
-    # covers the first _WARMUP_PREFIX entries; their memo builds still
-    # land in their memo: lines (wall time conserved), failures are
-    # left for the measured loop to surface. Old-methodology numbers
-    # are kept in OPTIMIZATION_r14.md per the measurement-change rule.
+    # warm-up lands on whichever queries run first: with a single
+    # uncharged first-entry pass, entries ~2-20 still carried 1.2-2.6x
+    # of shared-JVM warm-up (measured r14: catalog_event_labels 0.70 ->
+    # 1.85 in TWO independent runs, isolated median 0.7-class). C2
+    # compilation of the shared planner/codegen infrastructure takes
+    # tens of seconds of jobs, not one. The uncharged pass therefore
+    # covers the first _WARMUP_PREFIX entries in registry order; their
+    # memo builds still land in their memo: lines (wall time
+    # conserved), failures are left for the measured loop to surface.
     for _wfn, _ in list(REGISTRY.values())[:_WARMUP_PREFIX]:
         try:
             _wfn(spark, sf_dir).write.format("noop").mode("overwrite").save()

@@ -1,18 +1,22 @@
 #!/usr/bin/env python
-"""Regenerate tests/plan_snapshot.json (the _PROVEN_TAIL plan pin).
+"""Regenerate tests/plan_snapshot.json (the registry plan pins).
 
 Builds every registry entry's analyzed plan in TWO fresh Spark
-sessions (separate JVMs) and snapshots the normalized-plan hash of
-each entry whose hash agrees across both — i.e. is session-stable
-after scrubbing expression ids, application ids, temp paths, and
-uuids (tests/test_plan_snapshot.py:_NORM_RULES). Entries that still
-differ between the two probes are inherently session-variant (e.g.
-streaming sinks carrying per-run checkpoint state) and land in
-"excluded"; tail entries among them must be individually justified in
-ALLOWED_UNPINNED_TAIL below.
+sessions (separate JVMs) and pins the normalized-plan hash of each
+entry — every session-stable entry, by intent. An entry is stable when
+its hash agrees across both probes after scrubbing expression ids,
+application ids, temp paths, and uuids
+(tests/test_plan_snapshot.py:_NORM_RULES). The only entries allowed to
+differ are the streaming drains enrolled in ALLOWED_UNPINNED below,
+whose plans carry per-run stream state; they are written to
+"excluded". Any other unstable entry, and any unstable batch twin,
+makes the generator exit non-zero, naming them, without writing the
+snapshot.
 
 Run this ONLY for deliberate plan changes, and commit the diff
-together with the code change that caused it.
+together with the code change that caused it:
+
+    python scripts/gen_plan_snapshot.py
 """
 
 from __future__ import annotations
@@ -26,16 +30,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tests"))
 
 # Streaming entries whose ANALYZED plan embeds per-run stream state
 # (source offsets / checkpoint bindings) that no textual normalization
-# can make session-stable — the probe consistently excludes exactly
-# the six stream_* entries. Any of them living in _PROVEN_TAIL must be
-# justified here by checks that ARE pinned. Since round 6 the four
-# drained-projection entries carry BATCH TWIN pins
-# (plans/stream_twins.py, snapshotted under "twin_plans"): the twin
-# applies the same transformation + post-drain projection to a batch
-# read, so shared-code plan drift fails CI even while the streaming
-# entry is spilled. Keep this list short; anything else unstable
-# should be fixed or moved to the driver-check prefix.
-ALLOWED_UNPINNED_TAIL: dict[str, str] = {
+# can make session-stable. Each is justified here by checks that ARE
+# pinned: the drained-projection entries carry BATCH TWIN pins
+# (plans/stream_twins.py, snapshotted under "twin_plans") that apply
+# the same transformation + post-drain projection to a batch read, so
+# shared-code plan drift still fails the suite. Keep this list short;
+# anything else unstable should be fixed.
+ALLOWED_UNPINNED: dict[str, str] = {
     "stream_sessions": (
         "availableNow drain; plan embeds per-run stream state. Guarded "
         "by its watermark-sealed exact oracle (in-repo replica every "
@@ -142,6 +143,15 @@ def main() -> None:
         n: h for n, h in a_twins.items() if h is not None and b_twins.get(n) == h
     }
     twin_unstable = sorted(set(a_twins) - set(twin_plans))
+    print(f"pinned {len(plans)} / {len(a_plans)} entries; excluded: {excluded}")
+    print(f"twin pins {len(twin_plans)} / {len(a_twins)}; unstable: {twin_unstable}")
+    unexpected = sorted(set(excluded) - set(ALLOWED_UNPINNED))
+    if unexpected or twin_unstable:
+        sys.exit(
+            "session-unstable plans outside ALLOWED_UNPINNED: "
+            f"{unexpected}; unstable twins: {twin_unstable} — fix them "
+            "before committing (snapshot not written)"
+        )
     payload = {
         "_comment": (
             "Generated by scripts/gen_plan_snapshot.py — do not edit by "
@@ -154,13 +164,9 @@ def main() -> None:
         "plans": dict(sorted(plans.items())),
         "excluded": excluded,
         "twin_plans": dict(sorted(twin_plans.items())),
-        "allowed_unpinned_tail": ALLOWED_UNPINNED_TAIL,
+        "allowed_unpinned": ALLOWED_UNPINNED,
     }
     SNAPSHOT_PATH.write_text(json.dumps(payload, indent=1) + "\n")
-    print(f"pinned {len(plans)} / {len(a_plans)} entries; excluded: {excluded}")
-    print(f"twin pins {len(twin_plans)} / {len(a_twins)}; unstable: {twin_unstable}")
-    if twin_unstable:
-        sys.exit("twin plans must be session-stable — fix before committing")
 
 
 if __name__ == "__main__":

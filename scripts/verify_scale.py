@@ -185,9 +185,9 @@ from bench_scale import DECADE2_QUERIES as TIER2_QUERIES  # noqa: E402
 # their results_tier2 evidence down to the timing cohort (r11 ADVICE-
 # class gap, caught in self-review).
 TIER2_EXTRA = [
-    # r12: ivfpq_topk retired into ann_topk's four-way union (rotation
-    # merge) — the union entry inherits its tier-2 slot, so the ivfpq
-    # arm's 100x evidence continues under the merged hash (the other
+    # r12: ivfpq_topk retired into ann_topk's four-way union — the
+    # union entry inherits its tier-2 slot, so the ivfpq arm's 100x
+    # evidence continues under the merged hash (the other
     # three arms are cell/bucket-pruned or N·m·k* linear, all cheaper
     # than the ivfpq CTE stack already verified here in r10/r11)
     "ann_topk",

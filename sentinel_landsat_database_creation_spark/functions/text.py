@@ -1,10 +1,11 @@
 """Text-analysis column expressions (north-star extensions, BASELINE.json).
 
-All native pyspark.sql.functions — tokenization, n-gram shingling,
-stopword stats, md5 fingerprints — so the hot path stays inside
-whole-stage codegen. The md5 family doubles as the cross-engine
-deterministic hash (Spark and DuckDB both emit lowercase hex md5), which
-is what lets MinHash/SimHash have exact DuckDB oracles.
+All native pyspark.sql.functions — tokenization, normalization, n-gram
+shingling, md5-prefix keys — so the hot path stays inside whole-stage
+codegen. The md5 family doubles as the cross-engine deterministic hash
+(Spark and DuckDB both emit lowercase hex md5), which is what lets the
+MinHash/SimHash operators (operators/dedup.py) have exact DuckDB
+oracles.
 """
 
 from __future__ import annotations
@@ -60,15 +61,6 @@ def shingles(toks: Column, n: int = 3) -> Column:
     return F.when(F.size(toks) >= n, out).otherwise(
         F.array_repeat(F.lit(""), 0)
     )
-
-
-def stopword_count(toks: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    return F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-
-
-def fingerprint(text: Column) -> Column:
-    """Whole-document fingerprint: md5 over the normalized token stream."""
-    return F.md5(F.array_join(tokens(F.lower(text)), " "))
 
 
 def hash60(col: Column | str) -> Column:
@@ -129,37 +121,3 @@ def hash120(col: Column | str) -> list[Column]:
     ]
 
 
-def minhash_signature(shingle_col: Column, n_hashes: int) -> Column:
-    """MinHash signature as an array of n lexicographic-min md5 hex
-    digests, one per salted hash family member. Salting the input string
-    stands in for independent hash functions; min over hex strings is a
-    valid min-wise scheme because md5 output is uniform."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingle_col, lambda s: F.md5(F.concat(F.lit(f"{i}:"), s)))
-            )
-            for i in range(n_hashes)
-        ]
-    )
-
-
-def simhash16(toks: Column) -> Column:
-    """16-bit SimHash over token md5s: bit j is set when the majority of
-    tokens have hex nibble j >= 8 (each nibble's top bit votes +1/-1)."""
-    hashed = F.transform(toks, lambda t: F.md5(t))
-    bit_votes = [
-        F.aggregate(
-            hashed,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(
-                F.conv(F.substring(h, j + 1, 1), 16, 10).cast("int") >= 8, 1
-            ).otherwise(-1),
-        )
-        for j in range(16)
-    ]
-    out = F.lit(0)
-    for j, vote in enumerate(bit_votes):
-        out = out + F.when(vote >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return out.cast("int")

@@ -1,5 +1,6 @@
 """Multimodal payload columns: image/audio/video as opaque binary with
-typed metadata (MEDIA_SCHEMA), processed behind mapInPandas.
+typed metadata (media_id, kind, payload, mime), processed behind
+mapInPandas.
 
 ``decode_image`` guard-imports PIL: when present it decodes through the
 real mapInPandas path; when absent (this container) it raises
@@ -49,8 +50,8 @@ THUMB_SCHEMA = StructType(
 
 def media_from_documents(docs: DataFrame) -> DataFrame:
     """Derive a media table from the documents fixture: the utf-8 text
-    bytes stand in for an encoded payload. Schema matches MEDIA_SCHEMA's
-    core columns."""
+    bytes stand in for an encoded payload. Columns: media_id (long),
+    kind, payload (binary), mime."""
     return docs.select(
         F.col("doc_id").cast("long").alias("media_id"),
         F.lit("image").alias("kind"),

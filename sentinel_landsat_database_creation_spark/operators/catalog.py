@@ -101,12 +101,13 @@ def build_catalog(
     # goldens, leading by symmetry — the reference derives its histogram
     # edges from the data minimum, so a leading empty is unreachable
     # there and "no row" is the only reading consistent with its
-    # construction). Spine is spark.range(n_bins) — metadata-size.
+    # construction). Spine is spark.range(n_bins) — metadata-size, one
+    # explicit split so the plan carries no core-count token.
     spark = listing.sparkSession
     bounds = ranked.agg(
         F.min("bin").alias("min_bin"), F.max("bin").alias("max_bin")
     )
-    spine = spark.range(grid.n_bins).select(F.col("id").alias("bin"))
+    spine = spark.range(0, grid.n_bins, 1, 1).select(F.col("id").alias("bin"))
     placeholders = (
         spine.join(ranked.select("bin"), "bin", "left_anti")
         .join(F.broadcast(bounds))

@@ -149,7 +149,9 @@ def brute_force_topk(
     candidate corpus, rank per query. The corpus side never shuffles
     until the final per-query top-k (partial top-k per partition via
     rank window after a repartition on qid)."""
-    n_parts = embeddings.sparkSession.sparkContext.defaultParallelism
+    # the session's shuffle width, not defaultParallelism: the plan must
+    # not encode the host's core count
+    n_parts = int(embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     q = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
     ).withColumn("qn", norm_cast(F.col("qv")))
@@ -1644,7 +1646,9 @@ def bucketed_topk(
     """LSH-pruned approximate top-k: score only candidates sharing the
     query's sign bucket. Recall < 1 by design; the brute-force variant
     is the oracle to measure it against."""
-    n_parts = embeddings.sparkSession.sparkContext.defaultParallelism
+    # the session's shuffle width, not defaultParallelism: the plan must
+    # not encode the host's core count
+    n_parts = int(embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     qb = sign_lsh_buckets(queries, n_bits).withColumnRenamed("vec_id", "qid")
     cb = sign_lsh_buckets(embeddings, n_bits).withColumnRenamed("vec_id", "cid")
     q = (

@@ -130,71 +130,22 @@ def _weekly_by_type(spark, sf, etype: str, alias: str) -> DataFrame:
     )
 
 
-def q_pair_count_by_class(spark: SparkSession, sf: str) -> DataFrame:
-    clicks = _weekly_by_type(spark, sf, "click", "n_click")
-    views = _weekly_by_type(spark, sf, "view", "n_view")
-    return (
-        clicks.join(views, "wk")
-        .select(
-            _week_start_str(F.col("wk")).alias("week_start"),
-            "n_click",
-            "n_view",
-            (F.col("n_click") * F.col("n_view")).cast("long").alias("n_pairs"),
-        )
-        .orderBy("week_start")
-    )
-
-
 _SQL_WEEKLY_TYPED = f"""
   SELECT {_WK} AS wk, count(*) AS n FROM events WHERE event_type = '{{t}}' GROUP BY 1
 """
 
-SQL_PAIR_COUNT_BY_CLASS = f"""
-WITH c AS ({_SQL_WEEKLY_TYPED.format(t="click")}), v AS ({_SQL_WEEKLY_TYPED.format(t="view")})
-SELECT {_WEEK_START} AS week_start,
-       CAST(c.n AS BIGINT) AS n_click, CAST(v.n AS BIGINT) AS n_view,
-       CAST(c.n * v.n AS BIGINT) AS n_pairs
-FROM c JOIN v USING (wk) ORDER BY week_start
-"""
-
-
-def q_pair_count_compat(spark: SparkSession, sf: str) -> DataFrame:
-    """The reference's as-built overcount (op 24): it loops left *rows*,
-    so each shared class contributes cntL(c)^2 * cntS(c)
-    (main_function_beta.py:77-80)."""
-    clicks = _weekly_by_type(spark, sf, "click", "n_click")
-    views = _weekly_by_type(spark, sf, "view", "n_view")
-    return clicks.join(views, "wk").agg(
-        F.sum(F.col("n_click") * F.col("n_click") * F.col("n_view"))
-        .cast("long")
-        .alias("n_pairs_compat")
-    )
-
-
-SQL_PAIR_COUNT_COMPAT = f"""
-WITH c AS ({_SQL_WEEKLY_TYPED.format(t="click")}), v AS ({_SQL_WEEKLY_TYPED.format(t="view")})
-SELECT CAST(sum(c.n * c.n * v.n) AS BIGINT) AS n_pairs_compat
-FROM c JOIN v USING (wk)
-"""
-
-
 def q_pair_counts(spark: SparkSession, sf: str) -> DataFrame:
-    """r8 merge: pair_count_by_class + pair_count_compat under one
-    driver hash — the per-week pairing-count row now also carries the
-    as-built compat term.
+    """Per-week pairing counts, corrected and as-built, under one hash.
 
-    Coverage argument (policy: a merge is green only if BOTH parents'
-    semantics are exact): the first four columns are
-    q_pair_count_by_class's output verbatim (same weekly click/view
-    join, same week rendering, same corrected n_pairs product); the
-    fifth column is the PER-WEEK term ``n_click^2 * n_view`` of
-    q_pair_count_compat's as-built overcount (op 24,
-    main_function_beta.py:77-80) whose sum over weeks IS the parent's
-    scalar — pinning every additive term is strictly stronger than
-    pinning the sum. One scan pair and one join compute what the
-    parents computed in two. Both parents sat in the rotating r6-green
-    cohort (inside the r8 prefix at merge time, per the rotation
-    policy); the freed slot pulls a narrowing consumer forward."""
+    Coverage argument: the first four columns are the corrected count
+    (the weekly click/view join, week rendering, and n_pairs =
+    n_click * n_view); the fifth column is the PER-WEEK term
+    ``n_click^2 * n_view`` of the reference's as-built overcount (op
+    24: it loops left *rows*, so each shared class contributes
+    cntL(c)^2 * cntS(c), main_function_beta.py:77-80), whose sum over
+    weeks IS that scalar — pinning every additive term is strictly
+    stronger than pinning the sum. One scan pair and one join compute
+    both."""
     clicks = _weekly_by_type(spark, sf, "click", "n_click")
     views = _weekly_by_type(spark, sf, "view", "n_view")
     return (
@@ -660,10 +611,7 @@ def q_order_rank_checks(spark: SparkSession, sf: str) -> DataFrame:
     per-customer rank()<=2 window). A drift in either parent's rows,
     values, or tie-breaking changes the tagged union's hash. Columns
     not carried by a partition are NULL of the partner's exact type in
-    BOTH engines, so the cross-engine rendering is identical. Both
-    parents sat in the rotating r6-green cohort (inside the r8 prefix
-    at merge time); the freed slot pulls a narrowing consumer
-    forward."""
+    BOTH engines, so the cross-engine rendering is identical."""
     t = q_top_orders(spark, sf).select(
         F.lit("top10").alias("part"),
         "o_orderkey",
@@ -805,8 +753,7 @@ def q_doc_stats(spark: SparkSession, sf: str) -> DataFrame:
     a single space), so one column carries both parents' checks. All
     eight columns come off ONE scan — the first cut joined a separate
     stopword projection back on doc_id, two full scans plus a shuffle
-    at 100 TB for a per-row operator (quality_stats docstring). The
-    freed slot funds containment_dedup in the same checked prefix."""
+    at 100 TB for a per-row operator (quality_stats docstring)."""
     from ..operators.textops import quality_stats
 
     return quality_stats(table(spark, sf, "documents")).orderBy("doc_id")
@@ -848,14 +795,6 @@ def q_dedup_docs_exact(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_DEDUP_DOCS_EXACT = """
-SELECT md5(array_to_string(list_slice(string_split(text, ' '), 1, 10), '|')) AS fp,
-       CAST(min(doc_id) AS BIGINT) AS keep_doc_id,
-       CAST(count(*) AS BIGINT) AS n_dups
-FROM documents GROUP BY 1 ORDER BY fp
-"""
-
-
 # ---------------------------------------------------------------------------
 # embedding / array family (ops 14/26/43 analogs + similarity search)
 
@@ -894,11 +833,9 @@ def q_embed_slice(spark: SparkSession, sf: str) -> DataFrame:
 def q_embed_checks(spark: SparkSession, sf: str) -> DataFrame:
     """The embeddings-table shape checks under ONE driver hash —
     merged in r7 from the r5-green ``embed_quality`` + ``embed_slice``
-    entries (one table, adjacent ops 14/26 + 43 shapes) to free a
-    checked-prefix slot for ``winnow_fingerprint``; r11 absorbs the
-    r5-green ``embed_normalize`` too (same table, the adjacent
-    unit-norm preprocessing projection), funding the deletion-
-    lifecycle entries per the rotation math. Coverage is preserved
+    entries (one table, adjacent ops 14/26 + 43 shapes); r11 absorbs
+    the r5-green ``embed_normalize`` too (same table, the adjacent
+    unit-norm preprocessing projection). Coverage is preserved
     because the merged row goes green only if the HOF filter-count
     columns, the exploded slice values, AND the normalization
     arithmetic (exact sequential-fold norm + two one-IEEE-op divided
@@ -1320,9 +1257,7 @@ def q_antijoin_checks(spark: SparkSession, sf: str) -> DataFrame:
     (user, epoch-week) granularity (user-weeks that clicked but never
     purchased — the weekly funnel complement). The tag keeps the id
     spaces disjoint under the hash; columns a partition lacks are NULL
-    of the partner's exact type in both engines. Both parents sat in
-    the rotating r6-green cohort (inside the r8 prefix at merge time);
-    the freed slot pulls a narrowing consumer forward."""
+    of the partner's exact type in both engines."""
     nl = F.lit(None).cast("long")
     ns = F.lit(None).cast("string")
     c = q_customers_without_orders(spark, sf).select(
@@ -1468,9 +1403,7 @@ def q_pivot_rollup_checks(spark: SparkSession, sf: str) -> DataFrame:
     the 'ALL' subtotal markers, so Catalyst's grouping-set expansion
     stays pinned — plus rev_cents and n). Any drift in either parent's
     grouping, coalescing, or cents arithmetic flips the union's hash.
-    NULL columns are typed identically in both engines. Both parents
-    sat in the rotating r6-green cohort (inside the r8 prefix at merge
-    time); the freed slot pulls a narrowing consumer forward."""
+    NULL columns are typed identically in both engines."""
     nl = F.lit(None).cast("long")
     p = q_weekly_type_pivot(spark, sf).select(
         F.lit("pivot").alias("part"),
@@ -1705,34 +1638,21 @@ _BASE_REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | 
     "overlap_grid": (q_overlap_grid, SQL_OVERLAP_GRID),
     "catalog_week_class": (q_catalog_week_class, SQL_CATALOG_WEEK_CLASS),
     "catalog_event_labels": (q_catalog_event_labels, SQL_CATALOG_EVENT_LABELS),
-    # r8 merge: the weekly pairing counts and the as-built compat
-    # overcount ride one hash (q_pair_counts docstring has the
-    # coverage argument); the freed slot pulls neardup_pipeline
-    # forward into the r8 prefix for the MinHash key narrowing.
     "pair_counts": (q_pair_counts, SQL_PAIR_COUNTS),
     "pairing_keys": (q_pairing_keys, SQL_PAIRING_KEYS),
     "pairing_compat": (q_pairing_compat, SQL_PAIRING_COMPAT),
-    # r7: the op-6 compat CSV sink's exact byte formatting (header,
-    # quoting, ordering, trailing newline) under the driver's hash gate
+    # the op-6 compat CSV sink's exact byte formatting (header,
+    # quoting, ordering, trailing newline) under the oracle hash
     "compat_csv_roundtrip": (q_compat_csv_roundtrip, SQL_COMPAT_CSV_ROUNDTRIP),
     "range_join_events": (q_range_join_events, SQL_RANGE_JOIN_EVENTS),
     "event_funnel": (q_event_funnel, SQL_EVENT_FUNNEL),
     "retention_cohorts": (q_retention_cohorts, SQL_RETENTION_COHORTS),
-    # r8 merge: the two set-subtraction shapes ride one hash
-    # (q_antijoin_checks docstring); the freed slot pulls
-    # containment_dedup forward for the narrowing.
     "antijoin_checks": (q_antijoin_checks, SQL_ANTIJOIN_CHECKS),
-    # r8 merge: pivot + rollup grouping-set shapes ride one hash
-    # (q_pivot_rollup_checks docstring); the freed slot pulls
-    # dedup_clusters_lss forward for the narrowing.
     "pivot_rollup_checks": (q_pivot_rollup_checks, SQL_PIVOT_ROLLUP_CHECKS),
     "weekly_click_signup_outer": (q_weekly_click_signup_outer, SQL_WEEKLY_CLICK_SIGNUP_OUTER),
     "user_value_moving_avg": (q_user_value_moving_avg, SQL_USER_VALUE_MOVING_AVG),
     "doc_length_quantiles": (q_doc_length_quantiles, SQL_DOC_LENGTH_QUANTILES),
     "pricing_summary": (q_pricing_summary, SQL_PRICING_SUMMARY),
-    # r8 merge: the two order-window/top-k analytics ride one hash
-    # (q_order_rank_checks docstring); the freed slot pulls
-    # minhash_estimate forward for the narrowing.
     "order_rank_checks": (q_order_rank_checks, SQL_ORDER_RANK_CHECKS),
     "nation_revenue": (q_nation_revenue, SQL_NATION_REVENUE),
     "promo_revenue": (q_promo_revenue, SQL_PROMO_REVENUE),
@@ -1742,153 +1662,15 @@ _BASE_REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | 
         SQL_DISTINCT_USERS_BY_TYPE,
     ),
     "shipping_lag": (q_shipping_lag, SQL_SHIPPING_LAG),
-    # r7 merge: token_stats + doc_quality ride one hash (q_doc_stats
-    # docstring); the freed slot funds containment_dedup in the ext
-    # registry.
     "doc_stats": (q_doc_stats, SQL_DOC_STATS),
-    # r8: dedup_docs_exact retired into the ext registry's
-    # exact_dedup_checks merge (with normalized_dedup — both exact
-    # hash-groupBy dedups over documents; q_exact_dedup_checks
-    # docstring has the coverage argument).
-    # r7 merge: the two embeddings-table shape checks ride one hash
-    # (q_embed_checks docstring); the freed slot funds the winnowing
-    # fingerprint entry in the same checked prefix.
     "embed_checks": (q_embed_checks, SQL_EMBED_CHECKS),
     "winnow_fingerprint": (q_winnow_fingerprint, SQL_WINNOW_FINGERPRINT),
 }
 
 
-# The driver's correctness gate checks a bounded 50-entry prefix of the
-# registry in insertion order; entries past it get no recorded oracle
-# row that round. Rotation policy (amended round 4, per ADVICE): the
-# tail holds only queries that (a) are green at their most recent
-# driver check and (b) whose code path is either untouched since that
-# check or touched only by behavior-preserving hardening (e.g. the
-# _memo_checkpoint validity guard) — any query whose SEMANTICS or plan
-# shape moved goes back into the prefix the same round. Since round 5
-# the "untouched" claims are pinned MECHANICALLY:
-# tests/test_plan_snapshot.py compares every tail entry's normalized
-# analyzed plan against a committed snapshot, so an accidental plan
-# change in a spilled query fails CI instead of relying on diff review.
-#
-# Round 13 prefix (mandatory rotation of the whole r12 tail): the 49
-# entries spilled in r12 were last driver-checked in r11 — the
-# staleness deadline — so ALL of them rotate back into the prefix,
-# leaving ONE free slot at the r12 registry size of 99. One in-prefix
-# merge this round funds a second addition (both parents inside the
-# r13 prefix at merge time — the two r12 merges are the template):
-# - span_dedup absorbs span_scrub (both halves of Lee et al.
-#   sub-document dedup — the REPORT half's per-doc coverage stats and
-#   the TRANSFORM half's maximal-range scrub with its kept_md5 text
-#   pin — run over ONE shared _span_occurrences memo with their
-#   per-doc rows joined, so every column of both retired shapes rides
-#   one hash; q_span_dedup docstring has the coverage argument).
-# The two slots fund, inside the r13 prefix per policy:
-# - ann_index_lifecycle (NEW, r12 VERDICT item 3): the persisted
-#   IVFADC index — codes+codebooks+coarse as parquet written once,
-#   appended to, deleted from (the lsh_index_write lifecycle applied
-#   to ANN), and PROBED from the files without retraining; per-cell
-#   content digests + the probe ranking under one hash;
-# - bpe_token_checks (NEW, r12 VERDICT item 4): a trained merge-table
-#   BPE (Sennrich et al. 2016) — merges trained on the capped word-
-#   frequency table, every distinct corpus word encoded via broadcast
-#   merge ranks, per-doc BPE token counts feeding the pack_sequences
-#   budget — against a recursive-CTE DuckDB mirror of both training
-#   and encoding.
-# Registry: 99 - 1 (absorbed) + 2 (new) = 100; prefix = 48 rotating
-# + ann_index_lifecycle + bpe_token_checks = 50; tail = the 50
-# r12-prefix entries below.
-#
-# (The r13 tail — the 50 r12-prefix entries — was r12-green and
-# untouched by r13's work; its history is in the r13 round artifacts.)
-#
-# r14 rotation (optimization round 2 of 2 — the mandatory swap the
-# r13 comment above committed to): the 50 entries spilled in r13 were
-# last driver-checked in r12 — the staleness deadline — so ALL of them
-# rotate into the r14 prefix; 50 rotating into a 100-entry registry
-# leaves ZERO free prefix slots and the round adds no entries (the
-# optimization brief forbids registry surgery: a query that disappears
-# or whose hash moves is a REGRESSION regardless of speed). The tail
-# below is therefore exactly the 50 r13-prefix entries — all r13-green
-# (CORRECTNESS_r13: rows+schema+hash, err null) — and untouched by
-# r14's work except behavior-preserving hardening (the
-# _no_data_batch refactor shared by the drain entries preserves each
-# drain's pinned flag direction; salted_agg gains a doc/guard with the
-# salt expression untouched). The r14 plan changes (crop_volume_greedy
-# and scene_tensors_volume/_compressed: HOF slicing -> one metadata-out
-# Arrow stage) are all PREFIX entries this round, per policy.
-# Streaming members of this tail (stream_weekly_counts,
-# stream_dedup_keys, stream_click_signup, stream_dedup_ttl,
-# stream_lsh_delta) are session-variant and enrolled in
-# ALLOWED_UNPINNED_TAIL with pinned batch twins; the in-repo replica
-# (tests/test_oracle_equivalence.py) still checks ALL entries.
-#
-# r15 math: the 50 below are last driver-checked in r13, so they may
-# sit out r14 and must rotate into the r15 prefix; the 50 r14-prefix
-# entries (driver-checked this round) become the r15 tail. Additions
-# need in-prefix merges as before.
-_PROVEN_TAIL = [
-    "crop_pipeline",
-    "crop_slice_quality",
-    "catalog_week_class",
-    "compat_csv_roundtrip",
-    "event_funnel",
-    "retention_cohorts",
-    "weekly_click_signup_outer",
-    "distinct_users_by_type",
-    "doc_stats",
-    "embed_checks",
-    "stream_weekly_counts",
-    "stream_dedup_keys",
-    "stream_click_signup",
-    "media_frames",
-    "cosine_topk",
-    "sign_lsh_buckets",
-    "containment_dedup",
-    "token_fingerprint_checks",
-    "pq_topk",
-    "lang_guess",
-    "chunk_split",
-    "epoch_shuffle",
-    "vocab_coverage",
-    "bpe_token_checks",
-    "pack_sequences",
-    "bigram_nll",
-    "zorder_checks",
-    "semantic_dedup",
-    "bucketed_join_check",
-    "corpus_roundtrip",
-    "mixture_plan",
-    "stream_dedup_ttl",
-    "span_dedup",
-    "delta_dedup",
-    "ivf_probe2",
-    "ivf_train_centroids",
-    "quality_gate",
-    "salted_skew_checks",
-    "corpus_pruned_read",
-    "media_checks",
-    "lsh_delta_checks",
-    "crop_volume",
-    "scene_tensors_int16",
-    "train_centroids_distributed",
-    "stream_lsh_delta",
-    "curation_pipeline_write",
-    "ivfpq_topk_trained",
-    "ann_index_lifecycle",
-    "lsh_index_delete",
-    "approx_stats_checks",
-]
+# Plain definition order: the batch entries above, then the extension
+# registry. Imported here, at the bottom, because driver_queries_ext
+# imports this module.
+from .driver_queries_ext import REGISTRY_EXT  # noqa: E402
 
-
-def _full_registry():
-    from .driver_queries_ext import REGISTRY_EXT
-
-    merged = dict(_BASE_REGISTRY)
-    merged.update(REGISTRY_EXT)
-    tail = {name: merged.pop(name) for name in _PROVEN_TAIL if name in merged}
-    merged.update(tail)
-    return merged
-
-
-REGISTRY = _full_registry()
+REGISTRY = {**_BASE_REGISTRY, **REGISTRY_EXT}

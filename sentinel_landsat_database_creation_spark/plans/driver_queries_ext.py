@@ -149,11 +149,6 @@ def _sql_h60(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def _sql_h120_hi(expr: str) -> str:
-    """hash120's second word (hex chars 16-30 of the same digest)."""
-    return f"CAST(('0x' || substr(md5({expr}), 16, 15)) AS BIGINT)"
-
-
 # distinct 2-gram shingle KEY list per document (60-bit md5 prefixes
 # of the '_'-joined windows; distinct AFTER hashing, like the Spark
 # side's explode -> hash60 -> distinct). width=120 (r10): the DuckDB
@@ -411,8 +406,7 @@ def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     propagation; the DuckDB twin is a recursive CTE computing min
     reachable id). keep=1 marks the canonical survivor per cluster.
 
-    r12 merge: dedup_clusters_lss retired into this entry (both
-    parents inside the r12 prefix at merge time, rotation policy).
+    r12 merge: dedup_clusters_lss retired into this entry.
     Coverage argument: the absorbed entry was the SAME clustering
     decision computed by the second engine — alternating large-star/
     small-star (operators/dedup.py:connected_components_lss, Kiveris
@@ -422,9 +416,7 @@ def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     (algos_agree, oracle-pinned literal TRUE), so a divergence in
     either engine's labels flips the hash exactly as the two separate
     hashes did, while the pair pipeline — the expensive half both
-    parents duplicated — now runs once. The freed slot funds moving
-    corpus_delete_compact into the r12 prefix (its delete semantics
-    moved this round)."""
+    parents duplicated — now runs once."""
     from ..operators.dedup import (
         connected_components,
         connected_components_lss,
@@ -686,9 +678,7 @@ def q_token_fingerprint_checks(spark: SparkSession, sf: str) -> DataFrame:
     carrying both parents' column sets unchanged: the BPE-ish
     word/symbol regex counts and the order-sensitive polynomial
     rolling fingerprint). Any drift in either regex, the token split,
-    or the rolling-hash arithmetic flips the merged hash. Both parents
-    sat inside the r9 checked prefix at merge time (rotation policy);
-    the freed slot funds the new pq_topk entry."""
+    or the rolling-hash arithmetic flips the merged hash."""
     from ..operators.textops import token_fingerprint_stats
 
     return token_fingerprint_stats(table(spark, sf, "documents")).orderBy(
@@ -865,9 +855,7 @@ FROM s ORDER BY shard, pos
 
 def q_span_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """BOTH halves of Lee et al. sub-document dedup under one hash —
-    r13 merge: span_dedup absorbs span_scrub (both parents inside the
-    r13 prefix at merge time, per the rotation policy; the r12
-    dedup_clusters merge is the template). The REPORT half
+    r13 merge: span_dedup absorbs span_scrub. The REPORT half
     (operators/dedup.py:span_dedup — per-doc duplicated-span coverage
     as bounded equi-joins instead of suffix arrays) and the TRANSFORM
     half (scrub_spans — overlapping duplicate windows merged into
@@ -1079,10 +1067,7 @@ def q_exact_dedup_checks(spark: SparkSession, sf: str) -> DataFrame:
     column sets are NULL of the partner's exact type in both engines
     otherwise; both parents' full result
     sets ride the one hash, so drift in either fingerprint rule, the
-    normalization chain, or the survivor choice flips it. Both parents
-    sat in the rotating r6-green cohort (inside the r8 prefix at merge
-    time); the freed slot pulls winnow_fingerprint forward for the
-    packing-bound guard."""
+    normalization chain, or the survivor choice flips it."""
     from .driver_queries import q_dedup_docs_exact
 
     nl = F.lit(None).cast("long")
@@ -1282,9 +1267,6 @@ def q_lsh_append_probe(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-SQL_LSH_APPEND_PROBE = SQL_DELTA_NEARDUP
-
-
 def q_lsh_delta_checks(spark: SparkSession, sf: str) -> DataFrame:
     """r8 merge: delta_neardup + lsh_append_probe under one driver
     hash — the two persisted-LSH probe paths joined per verified pair.
@@ -1305,10 +1287,7 @@ def q_lsh_delta_checks(spark: SparkSession, sf: str) -> DataFrame:
     separately: it ALSO pins that the two lifecycles agree pairwise.
     The at-sf0.01 property that makes the append check non-vacuous is
     inherited from lsh_append_probe's fixture split (corpus partners
-    of both parities — a one-generation index loses rows). Both
-    parents sat in the rotating r6-green cohort (inside the r8 prefix
-    at merge time); the freed slot pulls pii_scrub forward for the
-    phone-pattern widening."""
+    of both parities — a one-generation index loses rows)."""
     fresh = q_delta_neardup(spark, sf)
     grown = q_lsh_append_probe(spark, sf).select(
         "batch_doc",
@@ -1696,8 +1675,7 @@ def q_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
     (operators/curation.py:quality_gate). r11 merge: absorbs the
     r5-green ``length_trim`` entry (operators/curation.py:length_trim
     — the per-language percent-rank length band, the adjacent curation
-    filter over the same table) so its slot funds the r11 deletion
-    lifecycle per the rotation math. Each doc row carries its lang and
+    filter over the same table). Each doc row carries its lang and
     that lang's trim stats (trim_n_kept / trim_min_chars /
     trim_max_chars — a 5-row broadcast join), so the merged row goes
     green only if BOTH the per-doc gate columns AND the per-lang
@@ -1933,23 +1911,17 @@ def q_ann_topk(spark: SparkSession, sf: str) -> DataFrame:
     full result sets and any drift in either bucketing, cell
     assignment, scoring, or ranking flips the hash. ann_recall
     continues to exercise the same operators against the brute-force
-    baseline; this entry pins their raw rankings. Both parents sat in
-    the rotating r6-green cohort (inside the r8 prefix at merge time);
-    the freed slot pulls lsh_index_compact forward for the narrowing.
+    baseline; this entry pins their raw rankings.
 
-    r10 (the fold the r9 docstrings committed to): the entry rotated
-    out of its pinned tail into the r10 prefix, so the 'pq' method —
-    q_pq_topk's full PQ/ADC ranking — joins the union three-way.
+    r10: the 'pq' method — q_pq_topk's full PQ/ADC ranking — joins the
+    union three-way.
 
-    r12 (the fold the r10 note committed to, executed at the promised
-    rotation): ivfpq_topk retires into this union as the fourth arm —
+    r12: ivfpq_topk retires into this union as the fourth arm —
     q_ivfpq_topk's composed IVF-PQ ranking VERBATIM (identical
     (qid, rnk, cid, cos) schema, same deterministic (adc, cid)
     tie-break), so the absorbed entry's full result set rides this
     hash and any drift in cell assignment, codes, LUT sums, or
-    ranking flips it. Both parents sat inside the r12 prefix at merge
-    time (rotation policy); the freed slot funds the new
-    ivfpq_topk_residual entry."""
+    ranking flips it."""
     lsh = q_lsh_topk(spark, sf).select(F.lit("lsh").alias("method"), "*")
     ivf = q_ivf_topk(spark, sf).select(F.lit("ivf").alias("method"), "*")
     pq = q_pq_topk(spark, sf).select(F.lit("pq").alias("method"), "*")
@@ -2027,15 +1999,10 @@ def q_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     2011) — the compression half of the production IVF-PQ stack: the
     full (qid, rnk, cid) ranking decided by exact-BIGINT sub-codebook
     distances on the quantize_vec grid, plus the exact rerank cosine
-    of each returned pair, all under one hash. Funded by merging the
-    two single-scan documents projections regex_tokens +
-    doc_fingerprint into token_fingerprint_checks (both inside the r9
-    prefix at merge time). Since r10 the ranking also rides inside
-    ann_topk's three-way union (the fold the r9 note committed to),
-    and the window's physically two-phase WindowGroupLimit plan is
-    pinned by tests/test_extensions.py:test_pq_ranking_is_two_phase —
-    the plan itself is byte-identical to its r9 snapshot, so the
-    entry stays pinned in the tail."""
+    of each returned pair, all under one hash. Since r10 the ranking
+    also rides inside ann_topk's union, and the window's physically
+    two-phase WindowGroupLimit plan is pinned by
+    tests/test_extensions.py:test_pq_ranking_is_two_phase."""
     from ..operators.similarity import pq_topk
 
     e = table(spark, sf, "embeddings")
@@ -2159,9 +2126,7 @@ def q_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
     against the brute-force baseline — the tuning number a real 100 TB
     user watches when trading candidate-set size (and, for PQ, code
     budget m·log2 k*) for recall (operators/similarity.py:topk_recall).
-    Integer hit counts, so the oracle is exact. The ivfpq widening is
-    a deliberate plan change, so the entry is pulled forward into the
-    r10 checked prefix; snapshot regenerated."""
+    Integer hit counts, so the oracle is exact."""
     from ..operators.similarity import (
         bucketed_topk,
         ivf_topk,
@@ -2448,9 +2413,6 @@ SELECT CAST(qid AS BIGINT) AS qid, CAST(rnk AS BIGINT) AS rnk,
        CAST(cid AS BIGINT) AS cid, cos
 FROM ranked WHERE rnk <= {3} ORDER BY qid, rnk
 """
-
-
-SQL_IVF_TRAINED_TOPK = _sql_ivf_trained_topk(1)
 
 
 def q_ann_recall_trained(spark: SparkSession, sf: str) -> DataFrame:
@@ -2852,8 +2814,7 @@ def q_ivfpq_topk_residual(spark: SparkSession, sf: str) -> DataFrame:
     at equal m (15 vs 11 hits of 60, pinned by tests/test_extensions.py:
     test_ivfpq_residual_beats_raw_on_clustered). This entry's job is
     the exact cross-engine pin of the residual arithmetic; the
-    clustered-fixture test pins the paper's claim. Funded by the r12
-    ann_topk<-ivfpq_topk merge (rotation policy)."""
+    clustered-fixture test pins the paper's claim."""
     from ..operators.similarity import (
         ivfpq_topk_residual,
         train_centroids,
@@ -2982,16 +2943,14 @@ def _sql_ann_radius(
     qfilter: str = "vec_id < 5",
 ) -> str:
     """DuckDB mirror of streaming/ann_delta.py:ann_radius_stream over
-    a FULL-corpus ann_index_write index — staged in r13 for the r14
-    merge-funded entry (the CLAUDE.md r14 note): coarse k-means + PQ
+    a FULL-corpus ann_index_write index: coarse k-means + PQ
     k-means + corpus codes + per-query nprobe cell assignment + the
     exact-BIGINT ADC sum, RADIUS-filtered instead of ranked (radius is
     the append-safe streaming contract — no per-qid window, so this
     oracle is strictly simpler than the lifecycle's). Shares the
     verified arithmetic with _sql_ann_index_lifecycle via the same
-    fragment generators; tests/test_streaming_ann.py already executes
-    it against the streaming plan, so the r14 entry only adds the
-    registry row and its fixture wiring."""
+    fragment generators; tests/test_streaming_ann.py executes it
+    against the streaming plan."""
     score = (
         "list_aggregate(list_transform(range(1, 65),"
         " i -> q.qv[i] * c.s[i]), 'sum')::DOUBLE"
@@ -3056,8 +3015,7 @@ def q_ann_index_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     RETURNED. The oracle re-derives everything from the embeddings
     table: coarse k-means + PQ k-means + corpus codes minus tombstones
     + the same ADC ranking (_sql_ann_index_lifecycle docstring has the
-    evaluation-shape story). Fills the ONE free r13 prefix slot
-    (rotation policy, driver_queries.py)."""
+    evaluation-shape story)."""
     import os as _os
     import time as _time
 
@@ -3745,9 +3703,7 @@ def q_bpe_token_checks(spark: SparkSession, sf: str) -> DataFrame:
     covers training, encoding, counting, AND packing. The oracle runs
     the whole stack in one statement — training as a single-row
     recursive state machine, encoding as a per-word recursion
-    (_sql_bpe_token_checks docstring). Funded by the r13
-    span_dedup <- span_scrub merge (rotation policy,
-    driver_queries.py)."""
+    (_sql_bpe_token_checks docstring)."""
     from pyspark.sql.window import Window
 
     from ..functions.bpe import (
@@ -3907,8 +3863,7 @@ def q_zorder_checks(spark: SparkSession, sf: str) -> DataFrame:
       lineitem's small key domain into a single bucket at every fixture
       sf (measured: 1 distinct bucket at sf0.01), so its per-bucket
       stats were vacuous; here they are checked per ADAPTIVE bucket
-      (up to 64 groups).
-    The freed slot funds semantic_dedup in the same checked prefix."""
+      (up to 64 groups)."""
     from ..operators.layout import written_file_stats, zorder_partitioned_write
     from ..session import session_tmp_path
 
@@ -4029,8 +3984,7 @@ def q_mixture_plan(spark: SparkSession, sf: str) -> DataFrame:
     riding each lang row as ``strat_n_kept`` — so the merged hash
     covers the sampler under two independent rate tables (the plan's
     derived thresholds AND the fixed ones); either component drifting
-    flips it. The freed slot funds approx_stats_checks per the
-    rotation math."""
+    flips it."""
     from ..operators.curation import mixture_plan, stratified_sample
 
     d = table(spark, sf, "documents")
@@ -4792,8 +4746,7 @@ def q_corpus_delete_compact(spark: SparkSession, sf: str) -> DataFrame:
     the documents view with the cohort excluded and a literal 0 for
     the proof column.
 
-    r12 widening (entry moved into the prefix with the semantics
-    change, per the rotation policy): the corpus now partitions by a
+    r12 widening: the corpus now partitions by a
     DERIVED plang that plants the two values the r11 delete silently
     skipped (r11 ADVICE medium) — NULL for the doc_id % 11 == 3
     cohort (__HIVE_DEFAULT_PARTITION__ on disk) and the
@@ -5259,10 +5212,6 @@ ORDER BY lang
 
 
 REGISTRY_EXT = {
-    # Streaming entries FIRST: the round-1 correctness record stopped at
-    # exactly the last two insertion-order entries (these), suggesting
-    # the driver's gate ran the registry in order under a budget. Cheap
-    # and load-bearing, they should never be the ones truncated.
     "stream_weekly_counts": (q_stream_weekly_counts, SQL_STREAM_WEEKLY_COUNTS),
     "stream_dedup_keys": (q_stream_dedup_keys, SQL_STREAM_DEDUP_KEYS),
     # rows-only: custom stateful streaming (not SQL-expressible);
@@ -5270,9 +5219,6 @@ REGISTRY_EXT = {
     "stream_sessions": (q_stream_sessions, SQL_STREAM_SESSIONS),
     "stream_sessions_native": (q_stream_sessions_native, SQL_STREAM_SESSIONS_NATIVE),
     "stream_click_signup": (q_stream_click_signup, SQL_STREAM_CLICK_SIGNUP),
-    # r8 merge: the two approximate top-k ANN paths ride one hash
-    # (q_ann_topk docstring); the freed slot pulls lsh_index_compact
-    # forward into the r8 prefix for the narrowing.
     "ann_topk": (q_ann_topk, SQL_ANN_TOPK),
     "media_frames": (q_media_frames, SQL_MEDIA_FRAMES),
     "user_sessions": (q_user_sessions, SQL_USER_SESSIONS),
@@ -5284,8 +5230,6 @@ REGISTRY_EXT = {
     "embed_cosine_neardup": (q_embed_cosine_neardup, SQL_EMBED_COSINE_NEARDUP),
     "cosine_topk": (q_cosine_topk, SQL_COSINE_TOPK),
     "sign_lsh_buckets": (q_sign_lsh_buckets, SQL_SIGN_LSH_BUCKETS),
-    # r7 merge partner of doc_stats (driver_queries.py): doc_quality
-    # retired into it; the freed slot funds containment_dedup.
     "containment_dedup": (q_containment_dedup, SQL_CONTAINMENT_DEDUP),
     "token_fingerprint_checks": (
         q_token_fingerprint_checks,
@@ -5294,33 +5238,17 @@ REGISTRY_EXT = {
     "pq_topk": (q_pq_topk, SQL_PQ_TOPK),
     "lang_guess": (q_lang_guess, SQL_LANG_GUESS),
     "doc_repetition": (q_doc_repetition, SQL_DOC_REPETITION),
-    # r7 merge (late, same mechanism as salted_skew_checks): chunking
-    # and the 90/5/5 split now ride one hash at chunk granularity
-    # (q_chunk_split docstring has the coverage argument); the freed
-    # slot funds epoch_shuffle in the same checked prefix.
     "chunk_split": (q_chunk_split, SQL_CHUNK_SPLIT),
     "epoch_shuffle": (q_epoch_shuffle, SQL_EPOCH_SHUFFLE),
     "decontaminate": (q_decontaminate, SQL_DECONTAMINATE),
-    # r11 merge: stratified_sample retired into mixture_plan (the same
-    # hash-bucket sampler under two independent rate tables rides one
-    # hash — q_mixture_plan docstring); the freed slot funds
-    # approx_stats_checks.
     "vocab_coverage": (q_vocab_coverage, SQL_VOCAB_COVERAGE),
-    # r13: trained merge-table BPE token counts feeding the pack
-    # budget (r12 VERDICT item 4; funded by the span_dedup <-
-    # span_scrub merge — both parents in the r13 prefix)
+    # trained merge-table BPE token counts feeding the pack budget
     "bpe_token_checks": (q_bpe_token_checks, SQL_BPE_TOKEN_CHECKS),
     "tfidf_terms": (q_tfidf_terms, SQL_TFIDF_TERMS),
     "unigram_nll": (q_unigram_nll, SQL_UNIGRAM_NLL),
     "pack_sequences": (q_pack_sequences, SQL_PACK_SEQUENCES),
-    # r11 merge: length_trim retired into quality_gate (same table,
-    # adjacent curation filter; the per-lang trim stats ride every doc
-    # row of that hash — q_quality_gate docstring); the freed slot
-    # funds the r11 deletion-lifecycle entries.
     "top_tokens_per_lang": (q_top_tokens_per_lang, SQL_TOP_TOKENS_PER_LANG),
     "bigram_nll": (q_bigram_nll, SQL_BIGRAM_NLL),
-    # r7 merge: the two z-order entries ride one hash (q_zorder_checks
-    # docstring); the freed slot funds semantic_dedup in the same prefix.
     "zorder_checks": (q_zorder_checks, SQL_ZORDER_CHECKS),
     "semantic_dedup": (q_semantic_dedup, SQL_SEMANTIC_DEDUP),
     "ann_recall": (q_ann_recall, SQL_ANN_RECALL),
@@ -5330,47 +5258,21 @@ REGISTRY_EXT = {
     "stream_dedup_ttl": (q_stream_dedup_ttl, SQL_STREAM_DEDUP_TTL),
     "span_dedup": (q_span_dedup, SQL_SPAN_DEDUP),
     "delta_dedup": (q_delta_dedup, SQL_DELTA_DEDUP),
-    # r12 merge: dedup_clusters_lss retired into dedup_clusters (both
-    # CC engines over one checkpointed pair set, per-node agreement
-    # pinned under the hash — q_dedup_clusters docstring); the freed
-    # slot funds moving corpus_delete_compact into the r12 prefix.
     "minhash_estimate": (q_minhash_estimate, SQL_MINHASH_ESTIMATE),
     "ivf_probe2": (q_ivf_probe2, SQL_IVF_PROBE2),
     "ivf_train_centroids": (q_ivf_train_centroids, SQL_IVF_TRAIN_CENTROIDS),
     "ann_recall_trained": (q_ann_recall_trained, SQL_ANN_RECALL_TRAINED),
     "quality_gate": (q_quality_gate, SQL_QUALITY_GATE),
-    # r7 merge: the two r5-green salted checks now ride one hash
-    # (q_salted_skew_checks docstring has the why); the freed slot
-    # funds pii_scrub in the same checked prefix.
     "salted_skew_checks": (q_salted_skew_checks, SQL_SALTED_SKEW_CHECKS),
     "pii_scrub": (q_pii_scrub, SQL_PII_SCRUB),
     "corpus_pruned_read": (q_corpus_pruned_read, SQL_CORPUS_PRUNED_READ),
     "corpus_dedup_write": (q_corpus_dedup_write, SQL_CORPUS_DEDUP_WRITE),
-    # r11 merge: embed_normalize retired into driver_queries.py's
-    # embed_checks (one embeddings table; the unit-norm projection
-    # rides every slice row of that hash — q_embed_checks docstring);
-    # the freed slot funds the r11 deletion-lifecycle entries.
-    # r7 merge (late, same mechanism as salted_skew_checks): the two
-    # r5-green media payload entries now ride one hash
-    # (q_media_checks docstring has the coverage argument); the freed
-    # slot funds span_scrub in the same checked prefix.
-    # r13 merge: span_scrub retired into span_dedup (both halves of
-    # Lee et al. sub-document dedup over ONE _span_occurrences memo,
-    # their per-doc rows joined under one hash — q_span_dedup
-    # docstring has the coverage argument); the freed slot funds
-    # bpe_token_checks in the r13 prefix.
     "media_checks": (q_media_checks, SQL_MEDIA_CHECKS),
     "domain_quota": (q_domain_quota, SQL_DOMAIN_QUOTA),
     "corpus_compact": (q_corpus_compact, SQL_CORPUS_COMPACT),
     "media_neardup": (q_media_neardup, SQL_MEDIA_NEARDUP),
-    # r8 merge: the two persisted-LSH probe lifecycles ride one hash,
-    # pairwise-joined (q_lsh_delta_checks docstring); the freed slot
-    # pulls pii_scrub forward for the phone-pattern widening.
     "lsh_delta_checks": (q_lsh_delta_checks, SQL_LSH_DELTA_CHECKS),
     "corpus_cube": (q_corpus_cube, SQL_CORPUS_CUBE),
-    # r8 merge: the raw-prefix and C4-normalized exact dedup layers
-    # ride one hash (q_exact_dedup_checks docstring); the freed slot
-    # pulls winnow_fingerprint forward for the packing-bound guard.
     "exact_dedup_checks": (q_exact_dedup_checks, SQL_EXACT_DEDUP_CHECKS),
     "scene_tensors_volume": (
         _sv.q_scene_tensors_volume,
@@ -5381,14 +5283,14 @@ REGISTRY_EXT = {
     # fixture scale by a DuckDB recursive CTE carrying (cursor,
     # surviving-list) state — see SQL_CROP_VOLUME_GREEDY's comment.
     "crop_volume_greedy": (_cv.q_crop_volume_greedy, _cv.SQL_CROP_VOLUME_GREEDY),
-    # r6: the E3 pipeline over Deflate/tiled/float-predictor + LZW
-    # GeoTIFFs — drives the compressed codec paths added to
+    # the E3 pipeline over Deflate/tiled/float-predictor + LZW
+    # GeoTIFFs — drives the compressed codec paths of
     # sources/tiffcodec.py through the full Spark plan
     "scene_tensors_compressed": (
         _scg.q_scene_tensors_compressed,
         _scg.SQL_SCENE_TENSORS_COMPRESSED,
     ),
-    # r7: the int16-DN + scale_factor raster path (real HLS v2.0 layout)
+    # the int16-DN + scale_factor raster path (real HLS v2.0 layout)
     # end-to-end — signed samples, horizontal predictor, LZW, and the
     # GDAL_METADATA calibration surfaced as columns and applied as
     # native integer-micro arithmetic
@@ -5396,71 +5298,61 @@ REGISTRY_EXT = {
         _si16.q_scene_tensors_int16,
         _si16.SQL_SCENE_TENSORS_INT16,
     ),
-    # r7: LSH index compaction content-verified from the post-swap
-    # files (write -> append -> compact -> per-band digest)
+    # LSH index compaction content-verified from the post-swap files
+    # (write -> append -> compact -> per-band digest)
     "lsh_index_compact": (q_lsh_index_compact, SQL_LSH_INDEX_COMPACT),
-    # r9: the distributed Lloyd trainer hashed DIRECTLY against the
-    # closed-form k-means oracle (r8 VERDICT item 2 — until now its
-    # correctness was transitively argued through the collected path)
+    # the distributed Lloyd trainer hashed directly against the
+    # closed-form k-means oracle
     "train_centroids_distributed": (
         q_train_centroids_distributed,
         SQL_TRAIN_CENTROIDS_DISTRIBUTED,
     ),
-    # r9: incremental near-dup as a STREAM (readStream -> row-local
+    # incremental near-dup as a STREAM (readStream -> row-local
     # shingle/sig/bucket -> stream-static index probe -> verify),
     # held to the batch lifecycle's exact oracle
     "stream_lsh_delta": (q_stream_lsh_delta, SQL_STREAM_LSH_DELTA),
-    # r9: the end-to-end curation deliverable (gate -> mixture ->
-    # corpus write -> pack), summarized from the written files
+    # the end-to-end curation deliverable (gate -> mixture -> corpus
+    # write -> pack), summarized from the written files
     "curation_pipeline_write": (
         q_curation_pipeline_write,
         SQL_CURATION_PIPELINE_WRITE,
     ),
-    # r12 merge: ivfpq_topk retired into ann_topk's four-way union —
-    # the fold q_ann_topk's r10 docstring committed to, executed at
-    # the promised rotation; its full ranking rides that hash and the
-    # freed slot funds ivfpq_topk_residual.
-    # r10: PERMISSIVE JSONL corrupt-record quarantine driven
-    # end-to-end from a deterministically-corrupted fixture (r9
-    # VERDICT item 7 — ingest hygiene was pytest-only before)
+    # PERMISSIVE JSONL corrupt-record quarantine driven end-to-end
+    # from a deterministically-corrupted fixture
     "jsonl_quarantine": (q_jsonl_quarantine, SQL_JSONL_QUARANTINE),
-    # r10: base write -> append-mode delta -> compact, answered from
-    # the compacted destination files (the corpus-side twin of
+    # base write -> append-mode delta -> compact, answered from the
+    # compacted destination files (the corpus-side twin of
     # lsh_index_compact's maintenance lifecycle)
     "corpus_append_compact": (
         q_corpus_append_compact,
         SQL_CORPUS_APPEND_COMPACT,
     ),
-    # r11: IVFADC with BOTH quantizers trained (r10 VERDICT item 3) —
-    # coarse from train_centroids, sub-codebooks from
-    # train_pq_codebooks; oracle composes the coarse k-means CTEs, the
-    # per-subspace PQ k-means CTEs, and the verified IVFADC probe
+    # IVFADC with BOTH quantizers trained — coarse from
+    # train_centroids, sub-codebooks from train_pq_codebooks; oracle
+    # composes the coarse k-means CTEs, the per-subspace PQ k-means
+    # CTEs, and the verified IVFADC probe
     "ivfpq_topk_trained": (q_ivfpq_topk_trained, SQL_IVFPQ_TOPK_TRAINED),
-    # r12: IVFADC with residual encoding — sub-codebooks trained on
+    # IVFADC with residual encoding — sub-codebooks trained on
     # y - q1(y), per-probed-cell query LUTs, exact-BIGINT end to end
-    # (r11 VERDICT item 2; funded by the ann_topk <- ivfpq_topk merge)
     "ivfpq_topk_residual": (q_ivfpq_topk_residual, SQL_IVFPQ_TOPK_RESIDUAL),
-    # r13: the persisted IVFADC index lifecycle (r12 VERDICT item 3) —
-    # write/append/delete on parquet codes+quantizers, probe answered
-    # from the files without retraining; per-cell content digests +
-    # ADC top-k under one hash (fills the one free r13 prefix slot)
+    # the persisted IVFADC index lifecycle — write/append/delete on
+    # parquet codes+quantizers, probe answered from the files without
+    # retraining; per-cell content digests + ADC top-k under one hash
     "ann_index_lifecycle": (q_ann_index_lifecycle, SQL_ANN_INDEX_LIFECYCLE),
-    # r11: the corpus DELETION lifecycle (r10 VERDICT item 4) —
-    # tombstone a cohort, partition-pruned rewrite, erasure proved
-    # from the destination files
+    # the corpus DELETION lifecycle — tombstone a cohort,
+    # partition-pruned rewrite, erasure proved from the destination
+    # files
     "corpus_delete_compact": (
         q_corpus_delete_compact,
         SQL_CORPUS_DELETE_COMPACT,
     ),
-    # r11: the INDEX half of the deletion lifecycle — the persisted
-    # LSH index stops serving ghost pairs for deleted documents;
-    # per-band content digest + zero-tombstone proof from the
-    # post-swap files
+    # the INDEX half of the deletion lifecycle — the persisted LSH
+    # index stops serving ghost pairs for deleted documents; per-band
+    # content digest + zero-tombstone proof from the post-swap files
     "lsh_index_delete": (q_lsh_index_delete, SQL_LSH_INDEX_DELETE),
-    # r11 (r10 VERDICT item 7): approximate members for the exact-only
-    # aggregates — percentile_approx's deterministic GK rank bound and
+    # approximate members for the exact-only aggregates —
+    # percentile_approx's deterministic GK rank bound and
     # approx_count_distinct's 10-sigma HLL bound enforced as booleans
-    # under the hash, exact siblings alongside; funded by the
-    # mixture_plan/stratified_sample merge
+    # under the hash, exact siblings alongside
     "approx_stats_checks": (q_approx_stats_checks, SQL_APPROX_STATS_CHECKS),
 }

@@ -142,7 +142,8 @@ def build_crop_dataset(
 ) -> DataFrame:
     """Stage 4: candidate centers x pair tensors -> quality-filtered,
     overlap-suppressed crop pairs. Returns one row per accepted crop
-    with both pixel payloads (CROP_PAIR_SCHEMA shape).
+    with both pixel payloads: pair_id, center_r, center_c, hr_pixels,
+    lr_pixels, hr_size, lr_size.
 
     The mask side is relational (candidate_centers, then one broadcast
     center array per mask); everything per pair — quality flags,

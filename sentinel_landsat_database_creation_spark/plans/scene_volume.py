@@ -243,7 +243,7 @@ def _summarize_side(
     The stats are exact longs (pixel values are integer-valued floats),
     so the whole decode path lands in the value hash.
 
-    r14 (guide §2.3, both consumers in the checked prefix): the decode
+    r14 (guide §2.3): the decode
     boundary now returns per-file STATS rows (_decode_band_stats)
     instead of pixel lists, and the stack aggregation reproduces
     stack_bands' exact drop semantics (exactly n_bands files per

@@ -3,11 +3,7 @@
 The analyzed plan of a drained streaming query embeds per-run state —
 memory-sink table names, stream source bindings — that no textual
 normalization makes session-stable, so the streaming entries can never
-be pinned directly by tests/test_plan_snapshot.py. While they sit in
-the driver-check prefix that is fine (the driver re-verifies them every
-round), but when the rotation policy spills them into ``_PROVEN_TAIL``
-the "untouched since last green check" claim needs a mechanical guard
-(round-5 VERDICT item 7).
+be pinned directly by tests/test_plan_snapshot.py; their twins are.
 
 Each builder here applies the SAME transformation the streaming query
 runs — the shared plan functions in ``streaming/weekly.py`` /
@@ -15,11 +11,10 @@ runs — the shared plan functions in ``streaming/weekly.py`` /
 ``plans/driver_queries_ext.py`` — to a BATCH read of the same source
 table, ending with the same post-drain projection. Any edit to the
 shared transformation or the output shape moves the twin's analyzed
-plan and fails the committed pin, even while the streaming entry is in
-the tail. (``withWatermark`` and ``dropDuplicatesWithinWatermark``
-analyze fine on batch frames in Spark 4; the watermark is a no-op at
-execution, which is exactly what we want — the twin pins the *plan*,
-not the drain.)
+plan and fails the committed pin. (``withWatermark`` and
+``dropDuplicatesWithinWatermark`` analyze fine on batch frames in
+Spark 4; the watermark is a no-op at execution, which is exactly what
+we want — the twin pins the *plan*, not the drain.)
 
 What a twin cannot see is the drain machinery itself (availableNow
 trigger, checkpoint handling, state-store sizing). That part is

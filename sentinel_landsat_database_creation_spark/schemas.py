@@ -1,4 +1,5 @@
-"""Fixed schemas for every engine table (SURVEY.md §1).
+"""Fixed schemas for the stage-1 catalog and the decoded band rasters
+(SURVEY.md §1).
 
 The reference keeps these implicit (hand-built dicts, positional CSV
 columns); here they are explicit StructTypes so sources validate on read
@@ -9,11 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     FloatType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -25,18 +24,6 @@ CATALOG_SCHEMA = StructType(
         StructField("class", StringType(), False),
         StructField("path", StringType(), False),
         StructField("data", StringType(), False),
-    ]
-)
-
-# Raw scene listing: one row per scene directory basename.
-SCENE_LISTING_SCHEMA = StructType([StructField("data", StringType(), False)])
-
-# Stage-2 pair table (reference: data_pair/fct_data_extraction.py:260-263)
-# with data_2 as a real ArrayType instead of a stringified Python list.
-PAIR_SCHEMA = StructType(
-    [
-        StructField("data_1", StringType(), False),
-        StructField("data_2", ArrayType(StringType(), False), False),
     ]
 )
 
@@ -62,68 +49,4 @@ BAND_RASTER_SCALED_SCHEMA = StructType(
         StructField("scale", DoubleType(), False),
         StructField("offset", DoubleType(), False),
     ]
-)
-
-# Stage-3 stacked scene tensor: 4 bands as a struct of flat arrays plus
-# dims — the Spark shape of the reference's [1,4,H,W] torch tensors
-# (main_function_beta.py:151-158).
-SCENE_TENSOR_SCHEMA = StructType(
-    [
-        StructField("scene", StringType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("bands", ArrayType(ArrayType(FloatType(), False), False), False),
-    ]
-)
-
-# Binary centerline mask (data_pair/fct_data_extraction.py:50,61).
-MASK_SCHEMA = StructType(
-    [
-        StructField("mask_id", StringType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("pixels", ArrayType(IntegerType(), False), False),
-    ]
-)
-
-# Stage-4 crop pair rows — one accepted crop pair per row, replacing the
-# reference's in-memory list-of-tensors (main_code.py:60-66). This is the
-# shape that keeps 100 TB embarrassingly parallel.
-CROP_PAIR_SCHEMA = StructType(
-    [
-        StructField("pair_id", LongType(), False),
-        StructField("center_r", IntegerType(), False),
-        StructField("center_c", IntegerType(), False),
-        StructField("hr_pixels", ArrayType(ArrayType(FloatType(), False), False), False),
-        StructField("lr_pixels", ArrayType(ArrayType(FloatType(), False), False), False),
-        StructField("hr_size", IntegerType(), False),
-        StructField("lr_size", IntegerType(), False),
-    ]
-)
-
-# Multimodal payload rows: opaque binary + typed metadata (north-star
-# extension; decode runs behind mapInPandas, see multimodal/).
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("payload", BinaryType(), True),
-        StructField("mime", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", LongType(), True),
-    ]
-)
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
 )

@@ -1,18 +1,12 @@
 """Loaders for the driver-generated synthetic tables (TESTDATA.md).
 
 Parquet scans stay lazy; Catalyst prunes columns and pushes filters into
-the scan, so loading "all tables" costs nothing until an action runs.
+the scan, so a table costs nothing until an action runs.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-from ..schemas import TESTDATA_TABLES
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -58,5 +52,3 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: table(spark, sf_dir, t) for t in TESTDATA_TABLES}

@@ -1,22 +1,19 @@
-"""Mechanical pin for the _PROVEN_TAIL rotation policy (round-5
-VERDICT item 7).
+"""Plan pins for every registry entry.
 
-The driver's correctness gate checks only the first 50 registry
-entries each round; spilled (tail) entries rely on the claim "nothing
-touched this query's plan since its last green check". That claim used
-to rest on diff review. This test makes it a CHECK: every registry
-entry's analyzed logical plan — normalized for the things that
-legitimately vary per session (expression ids, application ids, temp
-paths, stream query uuids) — is hashed against a committed snapshot
-(tests/plan_snapshot.json). An accidental plan change in a tail query
-now fails CI the same day, instead of surfacing rounds later at its
-next driver check.
+Every session-stable registry entry is pinned by intent: its analyzed
+logical plan — normalized for the things that legitimately vary per
+session (expression ids, application ids, temp paths, stream query
+uuids) — is hashed against a committed snapshot
+(tests/plan_snapshot.json), so an accidental plan change fails the
+suite the same day instead of surfacing as a wrong answer or a
+slowdown later. The only unpinned entries are the drained streaming
+queries enrolled in ``ALLOWED_UNPINNED`` (scripts/gen_plan_snapshot.py),
+each with a written reason and a pinned batch twin.
 
 Deliberate plan changes update the snapshot by re-running
-``python scripts/gen_plan_snapshot.py`` (which probes two fresh
-sessions and records only entries whose normalized plan is
-session-stable; the rest are listed under "excluded" with the driver
-gate as their only guard — keep that list short).
+``python scripts/gen_plan_snapshot.py``, which probes two fresh
+sessions and fails, naming the entries, if any entry outside
+``ALLOWED_UNPINNED`` is session-unstable.
 """
 
 from __future__ import annotations
@@ -30,6 +27,7 @@ from pathlib import Path
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
 
 SNAPSHOT_PATH = Path(__file__).parent / "plan_snapshot.json"
 SF_DIR = "/root/testdata/sf0.01"
@@ -64,7 +62,7 @@ def plan_hash(df) -> str:
 
 def _snapshot() -> dict:
     if not SNAPSHOT_PATH.exists():  # first generation bootstrap
-        return {"plans": {}, "excluded": [], "allowed_unpinned_tail": {}}
+        return {"plans": {}, "excluded": [], "allowed_unpinned": {}}
     return json.loads(SNAPSHOT_PATH.read_text())
 
 
@@ -87,27 +85,65 @@ def test_plan_matches_snapshot(spark, name):
     assert got == want, (
         f"{name}: analyzed plan changed since the committed snapshot.\n"
         "If the change is DELIBERATE, re-run scripts/gen_plan_snapshot.py "
-        "and commit the updated tests/plan_snapshot.json — and if the "
-        "query is in _PROVEN_TAIL, move it back into the driver-check "
-        "prefix this round (plans/driver_queries.py rotation policy).\n"
+        "and commit the updated tests/plan_snapshot.json.\n"
         f"normalized plan follows:\n{normalized_plan(df)[:4000]}"
     )
 
 
 def test_snapshot_covers_registry():
-    """Every registry entry is either snapshotted or explicitly
-    excluded (with the exclusion listed in the snapshot file), so a new
-    query can't silently skip the pin."""
+    """Every registry entry is pinned unless ALLOWED_UNPINNED enrolls
+    it with a written reason, and the snapshot's 'excluded' list is
+    exactly that allowlist: a new entry cannot skip the pin, and a
+    pinned entry cannot drop out of it silently."""
+    from gen_plan_snapshot import ALLOWED_UNPINNED
+
     from sentinel_landsat_database_creation_spark.plans.driver_queries import (
         REGISTRY,
     )
 
-    covered = set(SNAP["plans"]) | set(SNAP["excluded"])
-    missing = sorted(set(REGISTRY) - covered)
-    assert not missing, (
-        f"registry entries missing from the plan snapshot: {missing} — "
+    unpinned = sorted(
+        n
+        for n in REGISTRY
+        if n not in SNAP["plans"] and len(ALLOWED_UNPINNED.get(n, "").strip()) < 40
+    )
+    assert not unpinned, (
+        f"registry entries without a plan pin: {unpinned} — make their "
+        "plans session-stable and re-run scripts/gen_plan_snapshot.py, "
+        "or (for inherently session-variant plans) enroll them in "
+        "ALLOWED_UNPINNED with a written reason"
+    )
+    assert SNAP["excluded"] == sorted(ALLOWED_UNPINNED), (
+        "the snapshot's excluded list differs from ALLOWED_UNPINNED: "
+        f"{sorted(set(SNAP['excluded']) ^ set(ALLOWED_UNPINNED))} — "
         "re-run scripts/gen_plan_snapshot.py"
     )
+
+
+def test_generator_refuses_unlisted_unstable_entry(monkeypatch, tmp_path):
+    """An entry outside ALLOWED_UNPINNED whose plan differs between the
+    generator's two probes stops it, naming the entry, before it writes
+    a snapshot that would silently exclude it."""
+    import subprocess
+    import types
+
+    import gen_plan_snapshot
+    import test_plan_snapshot as module
+
+    first = {"plans": {"pinned_q": "h1", "drifting_q": "h2"}, "twins": {}}
+    second = {"plans": {"pinned_q": "h1", "drifting_q": "h3"}, "twins": {}}
+    out = tmp_path / "plan_snapshot.json"
+    monkeypatch.setattr(module, "SNAPSHOT_PATH", out)
+    monkeypatch.setattr(gen_plan_snapshot, "_probe", lambda: first)
+    monkeypatch.setattr(
+        subprocess,
+        "run",
+        lambda *a, **k: types.SimpleNamespace(stdout=json.dumps(second)),
+    )
+    with pytest.raises(SystemExit) as exc:
+        gen_plan_snapshot.main()
+    assert "drifting_q" in str(exc.value)
+    assert "pinned_q" not in str(exc.value)
+    assert not out.exists()
 
 
 @pytest.mark.parametrize("name", sorted(SNAP.get("twin_plans", {})))
@@ -130,9 +166,8 @@ def test_twin_plan_matches_snapshot(spark, name):
     want = SNAP["twin_plans"][name]
     assert got == want, (
         f"twin of {name}: analyzed plan changed since the committed "
-        "snapshot. If deliberate, re-run scripts/gen_plan_snapshot.py, "
-        "commit the snapshot, and move the streaming entry back into "
-        "the driver-check prefix this round.\n"
+        "snapshot. If deliberate, re-run scripts/gen_plan_snapshot.py "
+        "and commit the snapshot.\n"
         f"normalized plan follows:\n{normalized_plan(df)[:4000]}"
     )
 
@@ -153,17 +188,16 @@ def test_every_twin_is_pinned():
 
 
 def test_unpinned_allowlist_is_closed():
-    """The ALLOWED_UNPINNED_TAIL escape hatch must not grow silently
-    (r7 VERDICT item 6): every member needs a written justification
-    AND deliberate enrollment here. The seven streaming drains are the
-    only plans whose analyzed form embeds per-run stream state that
-    no normalization can scrub; each is guarded by its exact oracle
-    in the in-repo replica plus a pinned batch twin (twin_plans /
-    user_sessions). Adding an entry requires editing BOTH the
-    justification dict (scripts/gen_plan_snapshot.py — see the policy
-    comment above it) and this frozen set, in the same commit."""
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
-    from gen_plan_snapshot import ALLOWED_UNPINNED_TAIL
+    """The ALLOWED_UNPINNED escape hatch must not grow silently: every
+    member needs a written reason AND deliberate enrollment here. The
+    seven streaming drains are the only plans whose analyzed form
+    embeds per-run stream state that no normalization can scrub; each
+    is guarded by its exact oracle (tests/test_oracle_equivalence.py)
+    plus a pinned batch twin (twin_plans / user_sessions). Adding an
+    entry requires editing BOTH the reason dict
+    (scripts/gen_plan_snapshot.py) and this frozen set, in the same
+    commit."""
+    from gen_plan_snapshot import ALLOWED_UNPINNED
 
     enrolled = {
         "stream_sessions",
@@ -172,41 +206,13 @@ def test_unpinned_allowlist_is_closed():
         "stream_dedup_keys",
         "stream_dedup_ttl",
         "stream_click_signup",
-        # r10: spills to the tail for the first time; justified by the
-        # exact batch oracle + the new twin_stream_lsh_delta pin
         "stream_lsh_delta",
     }
-    assert set(ALLOWED_UNPINNED_TAIL) == enrolled, (
-        "ALLOWED_UNPINNED_TAIL changed without deliberate enrollment: "
-        f"{sorted(set(ALLOWED_UNPINNED_TAIL) ^ enrolled)} — a new "
-        "unpinned entry needs a written justification AND this test "
-        "updated in the same commit (policy comment in "
-        "scripts/gen_plan_snapshot.py)"
+    assert set(ALLOWED_UNPINNED) == enrolled, (
+        "ALLOWED_UNPINNED changed without deliberate enrollment: "
+        f"{sorted(set(ALLOWED_UNPINNED) ^ enrolled)} — a new "
+        "unpinned entry needs a written reason AND this test "
+        "updated in the same commit"
     )
     # the committed snapshot must agree with the source-of-truth dict
-    assert set(SNAP.get("allowed_unpinned_tail", {})) == enrolled
-    for name, why in ALLOWED_UNPINNED_TAIL.items():
-        assert len(why.strip()) >= 40, f"{name}: justification too thin"
-
-
-def test_tail_entries_are_pinned():
-    """The rotation policy's load-bearing set: every _PROVEN_TAIL entry
-    must carry a plan pin (a tail entry in 'excluded' would re-open the
-    manual-diff-review hole this test exists to close) — unless its
-    exclusion is one of the documented session-variant streaming
-    shapes."""
-    from sentinel_landsat_database_creation_spark.plans.driver_queries import (
-        _PROVEN_TAIL,
-    )
-
-    unpinned = [
-        n
-        for n in _PROVEN_TAIL
-        if n not in SNAP["plans"] and n not in SNAP["allowed_unpinned_tail"]
-    ]
-    assert not unpinned, (
-        f"tail entries without a plan pin: {unpinned} — either make "
-        "their plans deterministic, move them into the driver-check "
-        "prefix, or (for inherently session-variant plans) add them to "
-        "allowed_unpinned_tail with a reason in gen_plan_snapshot.py"
-    )
+    assert set(SNAP.get("allowed_unpinned", {})) == enrolled
